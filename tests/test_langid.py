@@ -152,6 +152,45 @@ def test_langid_differential_real_docs(spark, sf_dir):
     assert got == exp
 
 
+EDGE = [None, "", "  \t\n ", "ab", "A  b\t\tc  d", "x y"]
+
+
+def test_langid_fit_grams_equal_predict_grams_on_edge_inputs(spark):
+    """Fit derives grams from its checkpointed normalization; predict
+    composes char_grams_expr over the raw text.  Both must yield the
+    same gram arrays on NULL, empty, whitespace-only, shorter-than-n
+    and multi-space texts, and a model fitted on those texts must
+    score them as the pure-Python restatement does."""
+    df = spark.createDataFrame(
+        list(enumerate(EDGE)), "doc_id long, text string"
+    )
+    predict = dict(
+        df.select("doc_id", langid.char_grams_expr("text", N)).collect()
+    )
+    fit = dict(
+        df.select(
+            "doc_id", F.expr(langid._normalized_sql("text")).alias("_t")
+        )
+        .localCheckpoint(eager=True)
+        .select("doc_id", F.expr(langid._grams_from_normalized("_t", N)))
+        .collect()
+    )
+    exp = {i: None if t is None else _grams(t) for i, t in enumerate(EDGE)}
+    assert fit == predict == exp
+
+    train_rows = [("a", t) for t in EDGE if t is not None]
+    train_rows.append(("b", "the quick brown fox"))
+    model = langid.fit_langid(
+        spark.createDataFrame(train_rows, "lang string, text string"),
+        n=N, buckets=B, salt=SALT, alpha=ALPHA,
+    )
+    got = {
+        r["doc_id"]: (r["lang_nb"], r["lang_nb_score_micro"])
+        for r in langid.langid_scores(df, model).collect()
+    }
+    assert got == _py_fit_score(train_rows, list(enumerate(EDGE)))
+
+
 def test_langid_contract_errors(spark):
     df, _ = _train_df(spark)
     with pytest.raises(ValueError, match="n >= 1"):

@@ -1197,7 +1197,7 @@ def test_spread_for_compute_conditional(spark, tmp_path, monkeypatch):
     from pyspark.sql import DataFrame
 
     from wikiextractor_spark.operators.skew import (
-        _effective_splits,
+        packed_file_splits,
         spread_for_compute,
     )
 
@@ -1207,7 +1207,7 @@ def test_spread_for_compute_conditional(spark, tmp_path, monkeypatch):
     single = tmp_path / "single"
     spark.range(1000).coalesce(1).write.parquet(str(single))
     narrow = spark.read.parquet(str(single)).select("id")
-    assert _effective_splits(narrow, target) == 1
+    assert packed_file_splits(narrow) == 1
 
     # the probe must not compile a plan via .rdd
     def _no_rdd(self):
@@ -1228,7 +1228,7 @@ def test_spread_for_compute_conditional(spark, tmp_path, monkeypatch):
 
     # in-memory frame: unknown splits -> untouched...
     mem = spark.range(1000).coalesce(1)
-    assert _effective_splits(mem, target) is None
+    assert packed_file_splits(mem) is None
     assert spread_for_compute(mem) is mem
     # ...unless the caller asserts the split count
     forced = spread_for_compute(mem, assume_splits=1)
@@ -1238,57 +1238,78 @@ def test_spread_for_compute_conditional(spark, tmp_path, monkeypatch):
     assert spread_for_compute(narrow, min_partitions=1) is narrow
 
 
-def test_packed_file_splits_estimate(spark, tmp_path):
-    """packed_file_splits for one-split-per-file sources: bounded by
-    the file count on few-big-file layouts AND by Spark's small-file
-    bin-packing estimate on many-small-file layouts; None for
-    in-memory frames."""
+def _planned_splits(df):
+    """packed_file_splits(df), checked against the partitions Spark
+    plans for the same frame."""
     from wikiextractor_spark.operators.skew import packed_file_splits
 
-    # one file -> 1, no matter the byte-based estimate
+    est = packed_file_splits(df)
+    assert est == df.rdd.getNumPartitions()
+    return est
+
+
+def test_packed_file_splits_estimate(spark, tmp_path):
+    """packed_file_splits reads the scan partitions Spark plans: it
+    equals the frame's own ``rdd.getNumPartitions()`` on layouts
+    without row groups (bin-packed small files); frames with no
+    file-scan leaf are unknown (None)."""
+    from wikiextractor_spark.operators.skew import packed_file_splits
+
+    # one small file -> 1
     one = tmp_path / "one.txt"
     one.write_text("x" * 10_000)
-    assert packed_file_splits(spark.read.text(str(one))) == 1
+    assert _planned_splits(spark.read.text(str(one))) == 1
 
-    # many tiny files: the packing estimate (total + n*openCost over
-    # maxPartitionBytes) caps far below the file count
+    # many tiny files: Spark bin-packs them far below the file count
     many = tmp_path / "many"
     many.mkdir()
     for i in range(40):
         (many / f"p{i}.txt").write_text(f"line {i}\n")
-    est = packed_file_splits(spark.read.text(str(many)))
-    # 40 files x 4MB openCost / 128MB maxPartitionBytes ~ 2
-    assert est is not None and est < 40
+    assert _planned_splits(spark.read.text(str(many))) < 40
 
-    # in-memory: unknown
+    # no file-scan leaf: unknown
     assert packed_file_splits(spark.range(5)) is None
+    assert packed_file_splits(spark.range(5).localCheckpoint()) is None
+    assert packed_file_splits(spark.readStream.format("rate").load()) is None
 
 
 def test_effective_splits_codec_and_rowgroups(spark, tmp_path):
     """The split estimate is codec- and row-group-aware: unsplittable
-    compressed files count one split each; a parquet file counts
-    min(size splits, row groups)."""
-    from wikiextractor_spark.operators.skew import _effective_splits
-
-    target = 64  # force the per-file stat path
-    # 3-row-group parquet (small: size splits = 1 -> min(1, 3) = 1)
-    p = tmp_path / "rg"
-    spark.range(300).repartition(3).write.parquet(str(p))
-    df = spark.read.parquet(str(p))
-    nfiles = len(df.inputFiles())
-    assert _effective_splits(df, target) == nfiles  # 1 per small file
-
-    # unsplittable text: one split per file regardless of size
-    t = tmp_path / "txt"
-    t.mkdir()
-    (t / "a.json.gz").write_bytes(b"\x1f\x8b" + b"x" * 100)
+    compressed files count one split each; a parquet file counts at
+    most its row groups, even where Spark plans more byte ranges."""
     import gzip
 
+    from wikiextractor_spark.operators.skew import packed_file_splits
+
+    # unsplittable codec: one split per file regardless of size
+    t = tmp_path / "gz"
+    t.mkdir()
     with gzip.open(t / "a.json.gz", "wt") as f:
         for i in range(100):
             f.write(f'{{"doc_id": {i}, "text": "t{i}"}}\n')
     gz = spark.read.schema("doc_id long, text string").json(str(t))
-    assert _effective_splits(gz, target) == 1
+    assert _planned_splits(gz) == 1
+
+    # three small single-row-group parquet files: one split each
+    p = tmp_path / "rg"
+    spark.range(300).repartition(3).write.parquet(str(p))
+    assert packed_file_splits(spark.read.parquet(str(p))) == 3
+
+    # a multi-MB single-row-group parquet counts 1: Spark cuts byte
+    # ranges past the one row group, whose tasks do no work
+    single = tmp_path / "single"
+    spark.range(200_000).select(
+        F.md5(F.col("id").cast("string")).alias("h")
+    ).coalesce(1).write.parquet(str(single))
+    key = "spark.sql.files.maxPartitionBytes"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, "1m")
+    try:
+        one_rg = spark.read.parquet(str(single))
+        assert one_rg.rdd.getNumPartitions() > 1
+        assert packed_file_splits(one_rg) == 1
+    finally:
+        spark.conf.set(key, orig)
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -1906,25 +1927,26 @@ def test_heavy_hitters_recall_guarantee_boundary(spark):
     assert [(r["value"], r["n"]) for r in got] == [("hot", n_hot)]
 
 
-def test_max_partition_bytes_parses_size_suffixes(spark):
+def test_max_partition_bytes_parses_size_suffixes(spark, tmp_path):
     """spark.sql.files.maxPartitionBytes accepts JavaUtils byte-string
     suffixes ('128m'); a suffix-blind parse would read 128 bytes and
     inflate the split estimate ~1e6x, silently disabling the spread
     for externally-configured sessions."""
-    from wikiextractor_spark.operators.skew import _max_partition_bytes
+    big = tmp_path / "big.txt"
+    big.write_text(("y" * 99 + "\n") * 30_000)  # 3,000,000 bytes
 
     key = "spark.sql.files.maxPartitionBytes"
     orig = spark.conf.get(key)
     try:
         for raw, want in [
-            ("134217728", 134_217_728),
-            ("128m", 128 << 20),
-            ("128MB", 128 << 20),
-            ("1g", 1 << 30),
-            (" 64k ", 64 << 10),
+            ("1048576", 3),
+            ("1m", 3),
+            ("1MB", 3),
+            (" 64k ", 46),
+            ("1g", 1),
         ]:
             spark.conf.set(key, raw)
-            assert _max_partition_bytes(spark) == want, raw
+            assert _planned_splits(spark.read.text(str(big))) == want, raw
     finally:
         spark.conf.set(key, orig)
 

@@ -40,26 +40,38 @@ def test_region_revenue_broadcasts_dims(spark, sf_dir):
 
 
 def test_wiki_pipeline_is_shuffle_free(spark, tmp_path):
-    from wikiextractor_spark.pipeline import extract_documents
-
-    dump = tmp_path / "dump.xml"
-    dump.write_text(
-        "<mediawiki><siteinfo><base>https://x.org/wiki/M</base></siteinfo>"
-        "<page><title>A</title><id>1</id><revision><id>9</id>"
-        '<text xml:space="preserve">body</text></revision></page></mediawiki>',
-        encoding="utf8",
-    )
-    # narrow end to end when the scan supplies the parallelism
-    p = plan_of(extract_documents(spark, str(dump), min_parallelism=1))
-    assert "Exchange" not in p
-    # auto mode adds exactly the one documented raw-text repartition
-    # for under-split scans (single-file dumps)
+    """A dump with a scan split per core plans no shuffle at all; a
+    single-file dump (one split) adds exactly the one raw-text
+    spread before the UDF stage."""
     import re
 
-    p_auto = plan_of(extract_documents(spark, str(dump)))
-    # formatted plans print each node twice (tree + detail): count
-    # node headers, not substring occurrences
-    assert len(re.findall(r"\(\d+\) Exchange", p_auto)) <= 1
+    from wikiextractor_spark.pipeline import extract_documents
+
+    def write_dump(path, page_id):
+        path.write_text(
+            "<mediawiki><siteinfo><base>https://x.org/wiki/M</base>"
+            f"</siteinfo><page><title>A{page_id}</title><id>{page_id}</id>"
+            '<revision><id>9</id><text xml:space="preserve">body</text>'
+            "</revision></page></mediawiki>",
+            encoding="utf8",
+        )
+
+    def exchanges(path):
+        # formatted plans print each node twice (tree + detail): count
+        # node headers, not substring occurrences
+        p = plan_of(extract_documents(spark, str(path)))
+        return len(re.findall(r"\(\d+\) Exchange", p))
+
+    cores = spark.sparkContext.defaultParallelism
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for i in range(cores):
+        write_dump(parts / f"part-{i}.xml", i + 1)
+    assert exchanges(parts) == 0
+
+    single = tmp_path / "dump.xml"
+    write_dump(single, 1)
+    assert exchanges(single) == (1 if cores > 1 else 0)
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):

@@ -244,7 +244,7 @@ def main() -> None:
             f"| engine local[{cpus}] | 16 part files | {engp_s:.2f} | {mb/engp_s:.2f} |\n\n"
             "The single-file case is serialized by the scan (the XML "
             "source cannot split one uncompressed file — measured, see "
-            "pipeline.py min_parallelism); the engine still matches the "
+            "skew.spread_for_compute); the engine still matches the "
             "reference there. Real large dumps ship as multistream "
             "parts: with 16 part files the scan parallelizes and "
             "throughput scales with splits, which is the 100 TB "

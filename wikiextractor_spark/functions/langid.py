@@ -81,14 +81,9 @@ def _check_fit_params(n: int, buckets: int, alpha: float) -> None:
         raise ValueError(f"langid: alpha must be > 0, got {alpha}")
 
 
-def char_grams_expr(text_col: str, n: int) -> F.Column:
-    """Array of character ``n``-gram STRINGS over the lang-ID
-    normalization (lowercase, whitespace runs → one space, trimmed —
-    non-ASCII KEPT): sliding windows including the space joints (the
-    fastText boundary signal); text shorter than ``n`` chars is one
-    whole-text gram (the DSIR short-doc rule); empty/whitespace-only
-    text is an EMPTY array (such a document scores prior-only);
-    NULL text stays NULL."""
+def _normalized_sql(text_col: str) -> str:
+    """SQL for the lang-ID normalization of ``text_col``: lowercase,
+    whitespace runs → one space, trimmed (non-ASCII KEPT)."""
     from wikiextractor_spark.functions.tokenizer import (
         WS_SPLIT_PATTERN_JVM,
     )
@@ -97,17 +92,38 @@ def char_grams_expr(text_col: str, n: int) -> F.Column:
     # SQL literal needs no escape round trip (an escaped '\f' in an
     # F.expr literal silently degrades to the letter 'f' — caught by
     # the r14 prototype)
-    return F.expr(
-        f"""
-        transform(array(btrim(regexp_replace(lower({text_col}),
-                                             '{WS_SPLIT_PATTERN_JVM}',
-                                             ' '))), t ->
-          CASE WHEN length(t) = 0 THEN array()
-               WHEN length(t) < {n} THEN array(t)
-               ELSE transform(sequence(1, length(t) - {n} + 1),
-                              i -> substring(t, i, {n}))
-          END)[0]
+    return (
+        f"btrim(regexp_replace(lower({text_col}), "
+        f"'{WS_SPLIT_PATTERN_JVM}', ' '))"
+    )
+
+
+def _grams_from_normalized(col: str, n: int) -> str:
+    """SQL for the gram windows over an already-normalized string
+    ``col``: empty → empty array, shorter than ``n`` → one whole-text
+    gram, else the sliding ``n``-char windows; NULL stays NULL.  The
+    ONE definition fit and predict share, so both see the same gram
+    space."""
+    return f"""
+        CASE WHEN length({col}) = 0 THEN array()
+             WHEN length({col}) < {n} THEN array({col})
+             ELSE transform(sequence(1, length({col}) - {n} + 1),
+                            i -> substring({col}, i, {n}))
+        END
         """
+
+
+def char_grams_expr(text_col: str, n: int) -> F.Column:
+    """Array of character ``n``-gram STRINGS over the lang-ID
+    normalization (lowercase, whitespace runs → one space, trimmed —
+    non-ASCII KEPT): sliding windows including the space joints (the
+    fastText boundary signal); text shorter than ``n`` chars is one
+    whole-text gram (the DSIR short-doc rule); empty/whitespace-only
+    text is an EMPTY array (such a document scores prior-only);
+    NULL text stays NULL."""
+    return F.expr(
+        f"transform(array({_normalized_sql(text_col)}), "
+        f"t -> {_grams_from_normalized('t', n)})[0]"
     )
 
 
@@ -172,30 +188,11 @@ def fit_langid(
     # bit-identical).  `_t` is exactly char_grams_expr's inner
     # normalization, so NULL/empty semantics carry: _g NULL ⟺ _t
     # NULL, _g empty ⟺ length(_t) = 0.
-    from wikiextractor_spark.functions.tokenizer import (
-        WS_SPLIT_PATTERN_JVM,
-    )
-
     lab = labeled.select(
         F.col(label_col).cast("string").alias("lang"),
-        F.expr(
-            f"btrim(regexp_replace(lower({text_col}), "
-            f"'{WS_SPLIT_PATTERN_JVM}', ' '))"
-        ).alias("_t"),
+        F.expr(_normalized_sql(text_col)).alias("_t"),
     ).localCheckpoint(eager=True)
-    # the gram windows over the materialized normalization — the same
-    # CASE char_grams_expr builds, minus the (already-applied)
-    # normalization step
-    grams = F.expr(
-        f"""
-        CASE WHEN _t IS NULL THEN NULL
-             WHEN length(_t) = 0 THEN array()
-             WHEN length(_t) < {n} THEN array(_t)
-             ELSE transform(sequence(1, length(_t) - {n} + 1),
-                            i -> substring(_t, i, {n}))
-        END
-        """
-    )
+    grams = F.expr(_grams_from_normalized("_t", n))
     weights = None
     try:
         # r17 optimization (guide §1.2/§2.6): ONE concurrent wave of

@@ -24,6 +24,12 @@ import warnings
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# every signature pass (MinHash, SimHash) is compute-bound, so each
+# first spreads a low-split input (single file / single row group)
+# across the cores — a no-op whenever the scan already has enough
+# splits (see skew.py)
+from wikiextractor_spark.operators.skew import spread_for_compute
+
 
 # --------------------------------------------------------------------------
 # Exact dedup
@@ -199,11 +205,6 @@ def minhash_lsh_candidate_pairs(
     swap ``localCheckpoint`` for a reliable ``checkpoint`` dir so the
     sketch survives executor loss.
     """
-    from wikiextractor_spark.operators.skew import spread_for_compute
-
-    # the signature pass is compute-bound: spread a low-split input
-    # (single file / single row group) across the cores first — no-op
-    # whenever upstream already has enough splits (see skew.py)
     src = spread_for_compute(df.select(id_col, text_col))
     buckets = minhash_band_buckets(
         minhash_signature(src, text_col, id_col, num_hashes, shingle),
@@ -356,11 +357,6 @@ def simhash_candidate_pairs(
     grain (8-bit blocks, saturates ~10⁵ docs) is kept for small-data
     verification via ``sig_bits=32``.
     """
-    from wikiextractor_spark.operators.skew import spread_for_compute
-
-    # signature pass is compute-bound (64 interpreted bit-tallies per
-    # word): spread a low-split input across the cores first — no-op
-    # whenever upstream already has enough splits (see skew.py)
     src = spread_for_compute(df.select(id_col, text_col))
     sigs = (simhash64 if sig_bits == 64 else simhash32)(src, text_col, id_col)
     # materialization barrier: the signature expression is large;
@@ -710,8 +706,6 @@ def simhash_block_rows(
     text) for a kept corpus and hand it to
     :func:`cross_corpus_near_pairs` via ``right_blocks`` so
     incremental runs never re-signature the kept side."""
-    from wikiextractor_spark.operators.skew import spread_for_compute
-
     src = spread_for_compute(df.select(id_col, text_col))
     sigs = simhash64(src, text_col, id_col)
     return simhash_blocks(sigs, id_col, max_distance + 1, 64).localCheckpoint(
@@ -818,8 +812,6 @@ def minhash_band_rows(
     candidate topology (the exact-verify path re-reads texts anyway
     and has no use for ~8·num_hashes dead bytes per band row in its
     checkpoint and join shuffle)."""
-    from wikiextractor_spark.operators.skew import spread_for_compute
-
     src = spread_for_compute(df.select(id_col, text_col))
     sigs = minhash_signature(src, text_col, id_col, num_hashes, shingle)
     return minhash_band_buckets(

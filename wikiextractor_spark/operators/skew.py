@@ -23,11 +23,11 @@ equi-join — salt only routes.
 
 from __future__ import annotations
 
-import math
-import os
-import re
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_join(
@@ -70,161 +70,87 @@ def spread_for_compute(
     Sketch/signature passes (MinHash, SimHash, Arrow-UDF chains) cost
     far more CPU per row than the scan that feeds them.  When the
     input layout is unsplittable below its file/row-group grain (one
-    bz2 dump, a single-row-group parquet — parquet cannot split inside
-    a row group), the scan's parallelism caps the whole pipeline: a
-    32-core executor runs a 2-split corpus on 2 cores.  Spreading the
-    narrow (id, text) projection first costs one shuffle of the
+    bz2 or XML dump, a single-row-group parquet — parquet cannot split
+    inside a row group), the scan's parallelism caps the whole
+    pipeline: a 32-core executor runs a 2-split corpus on 2 cores.
+    Spreading the narrow projection first costs one shuffle of the
     projected columns and unlocks full parallelism (measured 2.3 s →
     1.1 s on the sf0.1 SimHash pipeline, single-row-group input).
 
-    At corpus scale the condition never fires: 100 TB of parquet has
+    At corpus scale the condition never fires: 100 TB of input has
     orders of magnitude more splits than the cluster has slots, so the
     frame passes through untouched — this is explicitly NOT a
     repartition-always (which would shuffle the full corpus for
     nothing).
 
-    The split probe reads the frame's FILE LEAVES (``inputFiles`` +
-    driver-side footer/size stats), never ``df.rdd`` — an ``.rdd``
-    access compiles a physical plan OUTSIDE AQE, so its partition
-    count can disagree with what the AQE-planned query actually runs,
-    and the conversion is wasted work on every call.  When the leaves
-    are unknowable cheaply (in-memory frames, non-local schemes) the
-    estimate is None and the frame passes through untouched — at
-    scale pass-through is the correct default, and callers that KNOW
-    their input is low-split can force the spread with
-    ``assume_splits``.
+    The split count is :func:`packed_file_splits`, read from the scan
+    leaves Spark's planner builds for ``df``.  AQE re-plans exchanges
+    at runtime, never file-scan partitions, so that count is what the
+    query runs.  When it is unknown (no file-scan leaf: in-memory
+    frames, checkpoints, streams) the frame passes through untouched;
+    callers that KNOW their input is low-split can force the spread
+    with ``assume_splits``.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    splits = assume_splits if assume_splits is not None else _effective_splits(df, target)
+    splits = assume_splits if assume_splits is not None else packed_file_splits(df)
     if splits is not None and splits < target:
         return df.repartition(target)
     return df
 
 
-# compressed whole-file codecs: one split per file, no matter the size
-_UNSPLITTABLE_SUFFIXES = (".bz2", ".gz", ".zst", ".lz4", ".deflate")
-
-
-# Spark accepts JavaUtils byte-string suffixes for size confs; a
-# suffix-blind parse would read '128m' as 128 bytes and inflate the
-# split estimate ~1e6x, silently disabling the spread.
-_BYTE_SUFFIX = {
-    "": 1, "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-    "p": 1 << 50, "pb": 1 << 50,
-}
-
-
-def _max_partition_bytes(spark: SparkSession) -> int:
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]*)\s*", raw)
-    if m and m.group(2).lower() in _BYTE_SUFFIX:
-        return int(m.group(1)) * _BYTE_SUFFIX[m.group(2).lower()]
-    return 134_217_728
-
-
-def _effective_splits(df: DataFrame, target: int) -> int | None:
-    """Estimate the scan parallelism of ``df``'s file leaves WITHOUT
-    compiling a physical plan.
-
-    Per local file: unsplittable-codec files count 1; parquet counts
-    ``min(size-based splits, row groups)`` (a single-row-group file
-    yields one working task no matter how many byte-range splits
-    Spark cuts — the exact shape the spread exists to fix); other
-    formats count size-based splits.  Returns None (= unknown, caller
-    passes through) for non-file-backed frames and non-local schemes.
-    Footer/size stats run only when the file count is already below
-    ``target``, so the driver never stats more than ``target`` files.
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    if len(files) >= target:
-        return len(files)
-    max_bytes = _max_partition_bytes(df.sparkSession)
-    total = 0
-    for uri in files:
-        if not uri.startswith("file:"):
-            return None
-        path = re.sub("^file:/+", "/", uri)
-        lower = path.lower()
-        try:
-            size = os.path.getsize(path)
-        except OSError:
-            return None
-        size_splits = max(1, math.ceil(size / max_bytes))
-        if lower.endswith(_UNSPLITTABLE_SUFFIXES):
-            total += 1
-        elif lower.endswith(".parquet"):
-            try:
-                import pyarrow.parquet as pq
-
-                row_groups = pq.ParquetFile(path).metadata.num_row_groups
-            except Exception:
-                # footer unreadable (no pyarrow, encrypted, transient):
-                # fall back to the codec-agnostic SIZE estimate — never
-                # to 1, which would claim a huge well-split file is one
-                # task and trigger the full shuffle this probe exists
-                # to avoid
-                row_groups = size_splits
-            total += max(1, min(size_splits, row_groups))
-        else:
-            total += size_splits
-    return total
-
-
-def _open_cost_bytes(spark: SparkSession) -> int:
-    raw = str(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
-    m = re.fullmatch(r"\s*(\d+)\s*([a-zA-Z]*)\s*", raw)
-    if m and m.group(2).lower() in _BYTE_SUFFIX:
-        return int(m.group(1)) * _BYTE_SUFFIX[m.group(2).lower()]
-    return 4_194_304
-
-
 def packed_file_splits(df: DataFrame) -> int | None:
-    """Scan-parallelism estimate for ONE-SPLIT-PER-FILE sources (the
-    XML dump reader — verified unable to split a single uncompressed
-    file — and whole-file codecs like gz).
+    """Scan parallelism of ``df``: the partition count of the
+    file-scan leaves in the physical plan Spark's planner builds for
+    it (``queryExecution().sparkPlan()``), summed over the leaves.
 
-    Two regimes bound the real partition count:
+    Spark's own ``FilePartition`` rule made that count, so every conf
+    (``maxPartitionBytes``, ``openCostInBytes``, ``minPartitionNum``),
+    codec splittability, small-file bin-packing and filesystem scheme
+    is already applied.  The probe builds the plan only; it never
+    touches ``df.rdd`` and runs no job.
 
-    * few big files — one task each, so the FILE COUNT is the cap;
-    * many small files — Spark BIN-PACKS files into shared partitions
-      up to ``maxPartitionBytes`` (each file padded by
-      ``openCostInBytes``), so the packing estimate
-      ``ceil((total + n·openCost) / maxPartitionBytes)`` is the cap
-      (a raw file count here would overstate parallelism and make a
-      caller skip a spread it needs).
+    Parquet cannot split inside a row group, and Spark still cuts
+    byte ranges that hold none, whose tasks do no work.  So when a
+    parquet leaf has fewer local (``file:``) files than the default
+    parallelism, its count is capped by the row groups in their
+    footers: a multi-MB single-row-group file counts 1.
 
-    The estimate is the min of the two.  For codecs Hadoop CAN split
-    (bz2) this may undercount on big files and trigger a spread that
-    strictly adds parallelism — the cheap direction of wrong.
-    Returns None (caller decides; pass-through is the scale default)
-    for non-file-backed frames and non-local schemes.
+    Returns None when the plan has no file-scan leaf or planning
+    fails.
     """
     try:
-        files = df.inputFiles()
-    except Exception:
+        leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+        target = df.sparkSession.sparkContext.defaultParallelism
+        counts = []
+        for leaf in (leaves.apply(i) for i in range(leaves.size())):
+            if leaf.getClass().getSimpleName() != "FileSourceScanExec":
+                continue
+            planned = leaf.inputRDD().getNumPartitions()
+            relation = leaf.relation()
+            if relation.fileFormat().toString() == "Parquet":
+                row_groups = _local_row_groups(
+                    list(relation.inputFiles()), target
+                )
+                if row_groups is not None:
+                    planned = min(planned, row_groups)
+            counts.append(planned)
+    except (Py4JError, PySparkException):
         return None
-    if not files:
+    return sum(counts) if counts else None
+
+
+def _local_row_groups(files: list[str], limit: int) -> int | None:
+    """Total row groups of local parquet ``files``; None when there
+    are ``limit`` or more files, a path is not ``file:``, or a footer
+    is unreadable."""
+    if len(files) >= limit or not all(f.startswith("file:") for f in files):
         return None
-    total = 0
-    for uri in files:
-        if not uri.startswith("file:"):
-            return None
-        try:
-            total += os.path.getsize(re.sub("^file:/+", "/", uri))
-        except OSError:
-            return None
-    spark = df.sparkSession
-    packed = math.ceil(
-        (total + len(files) * _open_cost_bytes(spark))
-        / _max_partition_bytes(spark)
-    )
-    return max(1, min(len(files), packed))
+    import pyarrow.parquet as pq
+
+    try:
+        return sum(
+            pq.ParquetFile(unquote(urlparse(f).path)).metadata.num_row_groups
+            for f in files
+        )
+    except (OSError, ValueError):  # pyarrow's IO / invalid-footer errors
+        return None

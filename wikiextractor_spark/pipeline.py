@@ -4,9 +4,10 @@ narrow, shuffle-free DataFrame plan (SURVEY.md §3.3):
     xml scan → native filters (P1-P4) → [vital broadcast joins] →
     clean UDF → compact UDF → render → write.text
 
-No shuffle anywhere (the only wide op would be an optional output
-repartition), so throughput scales linearly with input splits at any
-data size — the property that matters at 100 TB.
+No shuffle once the scan has a split per core (a narrower scan, such
+as one dump file, is spread once before the UDF stage), so throughput
+scales linearly with input splits at any data size — the property
+that matters at 100 TB.
 """
 
 from __future__ import annotations
@@ -14,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wikiextractor_spark.config import ExtractorConfig
-from wikiextractor_spark.operators.skew import (
-    packed_file_splits,
-    spread_for_compute,
-)
+from wikiextractor_spark.operators.skew import spread_for_compute
 from wikiextractor_spark.sink import render_documents, write_documents
 from wikiextractor_spark.sources.dump import (
     discover_base_prefix,
@@ -33,38 +31,13 @@ def extract_documents(
     dump_path: str,
     cfg: ExtractorConfig = ExtractorConfig(),
     vital_path: str | None = None,
-    min_parallelism: int | None = None,
 ) -> DataFrame:
     """Dump → cleaned documents:
-    ``(page_id, url, title, tags, cleaned, lines)``.
-
-    ``min_parallelism`` (default: the cluster's defaultParallelism):
-    when the scan produces fewer splits — a single uncompressed XML
-    file is NOT splittable by the XML source (verified) — the pages
-    are repartitioned once before the UDF stage, trading one cheap
-    raw-text shuffle for N× parallel Arrow workers.  On real
-    many-file/bz2 inputs the scan already has enough splits and this
-    is a no-op.
-    """
+    ``(page_id, url, title, tags, cleaned, lines)``."""
     prefix = discover_base_prefix(spark, dump_path)
-    pages = filter_pages(read_pages(spark, dump_path), cfg)
-
-    if min_parallelism is None:
-        min_parallelism = spark.sparkContext.defaultParallelism
-    if min_parallelism > 1:
-        # scan-parallelism estimate for the one-split-per-file XML
-        # source: min(file count, Spark's small-file bin-packing
-        # estimate) — file count alone would overstate parallelism on
-        # many-small-file dumps (Spark packs them into shared
-        # partitions) and a pure size estimate would overstate it on
-        # a big single-file dump (the XML reader cannot split one).
-        # The probe never touches df.rdd (which would compile a
-        # physical plan outside AQE, see skew.py).
-        splits = packed_file_splits(pages)
-        if splits is not None:
-            pages = spread_for_compute(
-                pages, min_parallelism, assume_splits=splits
-            )
+    # a dump with fewer scan splits than cores (one .xml or .xml.bz2
+    # file) is spread once before the UDF stage; a no-op otherwise
+    pages = spread_for_compute(filter_pages(read_pages(spark, dump_path), cfg))
 
     vital = read_vital_titles(spark, vital_path) if vital_path else None
     pages = apply_vital_filter(pages, vital)
