@@ -39,3 +39,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture(scope="session")
+def near_dup_docs(spark):
+    """Seeded ``(doc_id, text)`` corpus with planted near-duplicates:
+    240 random 40-word docs over a 300-word vocabulary, plus 40
+    copies (ids 1000+) of every third doc, every other copy with one
+    word replaced."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(300)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(40)))
+            for i in range(240)]
+    for j in range(40):
+        words = rows[j * 3][1].split(" ")
+        if j % 2:
+            words[rng.randrange(len(words))] = "zz"
+        rows.append((1000 + j, " ".join(words)))
+    return spark.createDataFrame(
+        rows, "doc_id long, text string"
+    ).localCheckpoint(eager=True)

@@ -2873,6 +2873,48 @@ def test_cross_corpus_embedding_pairs_and_subtract(spark, emb):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize("grain", ["jaccard", "hamming", "cosine"])
+def test_self_pairs_equal_ordered_cross_pairs(spark, near_dup_docs, emb, grain):
+    """Self mode is the ordered special case of cross mode: per grain,
+    the self-join pairs of a corpus equal its cross pairs against
+    itself restricted to ``left_id < right_id`` — ids AND the verified
+    value (jaccard / hamming with both signatures / cos)."""
+    from wikiextractor_spark.operators.similarity import (
+        cross_corpus_embedding_pairs,
+        embedding_near_duplicate_pairs,
+    )
+
+    if grain == "jaccard":
+        self_pairs = dedup.near_duplicate_pairs(near_dup_docs)
+        cross = dedup.cross_corpus_jaccard_pairs(near_dup_docs, near_dup_docs)
+    elif grain == "hamming":
+        self_pairs = dedup.simhash_candidate_pairs(near_dup_docs)
+        cross = dedup.cross_corpus_near_pairs(near_dup_docs, near_dup_docs)
+    else:
+        base = emb.select("vec_id", "embedding").orderBy("vec_id").limit(60)
+        # planted near-copies: every vector nudged by +-0.01 per lane
+        nudged = base.limit(30).select(
+            (F.col("vec_id") + 10_000).alias("vec_id"),
+            F.expr(
+                "transform(embedding, (x, i) -> x + cast(pmod(i, 3) - 1 "
+                "as float) * 0.01f)"
+            ).alias("embedding"),
+        )
+        corpus = base.union(nudged).localCheckpoint(eager=True)
+        self_pairs = embedding_near_duplicate_pairs(corpus, threshold=0.9)
+        cross = cross_corpus_embedding_pairs(corpus, corpus, threshold=0.9)
+
+    want = sorted(tuple(r) for r in self_pairs.collect())
+    got = sorted(
+        tuple(r)
+        for r in cross.filter(F.col("left_id") < F.col("right_id")).collect()
+    )
+    assert want and got == want
+    # the planted near-copies verify below a perfect score, so the
+    # value column (last) is really compared, not just the ids
+    assert {r[-1] for r in want} - {0 if grain == "hamming" else 1.0}
+
+
 def test_lsh_bucket_dim_mismatch_raises(spark, emb):
     """A vector whose length differs from the hyperplane dim must
     raise loudly, not silently land every vector in bucket 0 (which

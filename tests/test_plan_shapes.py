@@ -230,3 +230,32 @@ def test_repeated_spans_no_window_exchange(spark, sf_dir):
         # partial + final count of the gram inventory
         assert "partial_count" in p
         assert "CartesianProduct" not in p
+
+
+@pytest.mark.parametrize(
+    "fn_name, exchanges, eager_jobs",
+    [("near_duplicate_pairs", 14, 5), ("simhash_candidate_pairs", 3, 1)],
+)
+def test_near_dup_pair_plans_pinned(
+    spark, near_dup_docs, fn_name, exchanges, eager_jobs,
+):
+    """The shared candidate path must keep each self path's shape:
+    the number of ``Exchange`` nodes in the physical plan, and the
+    number of eager jobs (sketch and candidate checkpoints) run while
+    the plan is composed.  The pins are the values measured before the
+    grains shared one bucket join."""
+    import re
+
+    from wikiextractor_spark.operators import dedup
+
+    sc = spark.sparkContext
+    group = f"compose-{fn_name}"
+    sc.setJobGroup(group, f"compose {fn_name}")
+    try:
+        pairs = getattr(dedup, fn_name)(near_dup_docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan_of(pairs)))
+    assert (n_exchanges, n_jobs) == (exchanges, eager_jobs)

@@ -12,6 +12,24 @@ Python UDFs, no driver-side loops) so they scale to 100 TB:
   narrow;
 * n-gram Jaccard — exact verification on a bounded candidate set.
 
+Every near-dup grain — MinHash/Jaccard and SimHash/Hamming here,
+hyperplane-LSH and k-means-cluster cosine in ``similarity.py`` — runs
+one candidate topology: sketch each row into bucket keys, materialize
+the sketch, equi-join on the keys (:func:`_bucket_pairs`), verify the
+candidates, then drop losers (:func:`_drop_losers` within a corpus,
+:func:`_subtract_flagged` across corpora).  Self mode is the ordered
+special case of cross mode: the same join, keeping ``a.id < b.id``.
+
+The sketch is materialized with an eager ``localCheckpoint`` before
+the join.  Without that barrier Catalyst's projection collapse inlines
+the (large) sketch expression into every bucket key on BOTH join
+sides — ~8× recomputation and a codegen blowup (measured 26s → ~2s at
+sf0.1).  The checkpointed blocks are freed by Spark's ContextCleaner
+once the returned DataFrame is garbage-collected: no module-global
+cache, so concurrent callers each own their materialization.  On a
+real cluster swap ``localCheckpoint`` for a reliable ``checkpoint``
+dir so the sketch survives executor loss.
+
 Hash functions are md5-hex (lexicographic min for MinHash) so the
 DuckDB oracle can reproduce signatures bit-for-bit — a deliberate
 engine-agnostic choice over murmur3 (``F.hash``), which DuckDB cannot
@@ -181,6 +199,43 @@ def minhash_band_buckets(
     )
 
 
+def _bucket_pairs(
+    left: DataFrame, right: DataFrame | None, keys: tuple[str, ...],
+    id_col: str, carry: dict[str, str] | None = None,
+) -> DataFrame:
+    """Candidate pairs from materialized bucket tables: ONE equi-join
+    on ``keys``, never all-pairs — the join behind every near-dup
+    grain and mode.
+
+    One table (``right=None``) self-joins and keeps ``a.id < b.id``
+    → ``(id_a, id_b)``; two tables join across → ``(left_id,
+    right_id)``.  ``carry`` maps payload columns to output prefixes,
+    suffixed like the ids (``{"simhash": "sim"}`` → ``sim_a``/``sim_b``
+    or ``sim_left``/``sim_right``).  No distinct: each caller dedupes
+    where its verify makes that cheapest."""
+    a = left.alias("a")
+    b = (left if right is None else right).alias("b")
+    cond = None
+    for k in keys:
+        eq = F.col(f"a.{k}") == F.col(f"b.{k}")
+        cond = eq if cond is None else cond & eq
+    if right is None:
+        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        ids, sfx = ("id_a", "id_b"), ("a", "b")
+    else:
+        ids, sfx = ("left_id", "right_id"), ("left", "right")
+    cols = [
+        F.col(f"a.{id_col}").alias(ids[0]),
+        F.col(f"b.{id_col}").alias(ids[1]),
+    ]
+    for src, prefix in (carry or {}).items():
+        cols += [
+            F.col(f"a.{src}").alias(f"{prefix}_{sfx[0]}"),
+            F.col(f"b.{src}").alias(f"{prefix}_{sfx[1]}"),
+        ]
+    return a.join(b, cond).select(*cols)
+
+
 def minhash_lsh_candidate_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_hashes: int = 8, shingle: int = 3,
@@ -188,43 +243,12 @@ def minhash_lsh_candidate_pairs(
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash-LSH: the only wide
     op is the equi-join on (band, band_hash) — sub-quadratic and
-    AQE-skew-friendly at scale.
-
-    The bucket table is materialized (eager ``localCheckpoint``)
-    before the self-join: without a materialization barrier,
-    Catalyst's projection collapse inlines the (large) signature
-    expression into every band hash on BOTH join sides — ~8×
-    recomputation and a codegen blowup (measured 26s → ~2s at sf0.1).
-
-    Lifecycle: the checkpointed blocks are freed by Spark's
-    ContextCleaner once the returned DataFrame is garbage-collected —
-    no module-global cache, so concurrent/interleaved callers each own
-    their materialization (r2 kept one global persisted table and
-    unpersisted it on the NEXT call, which could yank the cache out
-    from under a still-live candidate DataFrame).  On a real cluster
-    swap ``localCheckpoint`` for a reliable ``checkpoint`` dir so the
-    sketch survives executor loss.
-    """
-    src = spread_for_compute(df.select(id_col, text_col))
-    buckets = minhash_band_buckets(
-        minhash_signature(src, text_col, id_col, num_hashes, shingle),
-        id_col, bands, rows_per_band,
-    ).localCheckpoint(eager=True)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
+    AQE-skew-friendly at scale.  → ``(id_a, id_b)``."""
+    buckets = minhash_band_rows(
+        df, text_col, id_col, num_hashes, shingle, bands, rows_per_band,
+        keep_sig=False,
     )
+    return _bucket_pairs(buckets, None, ("band", "band_hash"), id_col).distinct()
 
 
 # --------------------------------------------------------------------------
@@ -357,37 +381,45 @@ def simhash_candidate_pairs(
     grain (8-bit blocks, saturates ~10⁵ docs) is kept for small-data
     verification via ``sig_bits=32``.
     """
+    return _hamming_pairs(
+        _simhash_block_rows(df, text_col, id_col, max_distance, sig_bits),
+        None, id_col, max_distance,
+    ).distinct()
+
+
+def _simhash_block_rows(
+    df: DataFrame, text_col: str, id_col: str, max_distance: int,
+    sig_bits: int,
+) -> DataFrame:
+    """Spread → signature → ``max_distance + 1`` pigeonhole blocks →
+    eager checkpoint: the one SimHash sketch builder."""
     src = spread_for_compute(df.select(id_col, text_col))
     sigs = (simhash64 if sig_bits == 64 else simhash32)(src, text_col, id_col)
-    # materialization barrier: the signature expression is large;
-    # without it, projection collapse inlines it into both join sides
-    # (see minhash_lsh_candidate_pairs).
-    blocks = simhash_blocks(
+    return simhash_blocks(
         sigs, id_col, max_distance + 1, sig_bits
     ).localCheckpoint(eager=True)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int")
-    # the exact Hamming re-check runs BEFORE distinct: block buckets
-    # propose far more false candidates than true pairs (birthday
-    # collisions on small blocks), and the filter is a cheap narrow
-    # expression while distinct is a shuffle — dedup the survivors,
-    # not the candidate stream
-    return (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_distance)
-        .distinct()
+
+
+def _hamming_pairs(
+    left_blocks: DataFrame, right_blocks: DataFrame | None, id_col: str,
+    max_distance: int,
+) -> DataFrame:
+    """Block-bucket candidates (:func:`_bucket_pairs`) with the exact
+    ``bit_count(a XOR b)`` re-check, plus a ``hamming`` column.
+
+    The re-check runs BEFORE any distinct: block buckets propose far
+    more false candidates than true pairs (birthday collisions on
+    small blocks), and the filter is a cheap narrow expression while
+    distinct is a shuffle — callers dedup the survivors, not the
+    candidate stream."""
+    pairs = _bucket_pairs(
+        left_blocks, right_blocks, ("block_idx", "block_val"), id_col,
+        {"simhash": "sim"},
+    )
+    sim_a, sim_b = pairs.columns[2:]
+    ham = F.bit_count(F.col(sim_a).bitwiseXOR(F.col(sim_b))).cast("int")
+    return pairs.withColumn("hamming", ham).filter(
+        F.col("hamming") <= max_distance
     )
 
 
@@ -618,6 +650,61 @@ def connected_component_labels(
     return labels
 
 
+def _check_survivors(survivors: str, allowed: tuple[str, ...]) -> None:
+    if survivors not in allowed:
+        raise ValueError(
+            f"survivors must be one of {', '.join(map(repr, allowed))}, "
+            f"got {survivors!r}"
+        )
+
+
+def _drop_losers(
+    df: DataFrame, pairs: DataFrame, id_col: str, survivors: str,
+    score=None,
+) -> DataFrame:
+    """``df`` minus the losers of the verified ``(id_a, id_b)`` pair
+    graph under ``survivors`` — the one survivor policy behind every
+    near-dup grain (the policies are documented on :func:`dedup_near`;
+    ``score`` is the Column ``'best'`` ranks by)."""
+    if survivors == "chain":
+        losers = pairs.select(F.col("id_b").alias(id_col))
+    elif survivors == "component":
+        labels = connected_component_labels(pairs)
+        losers = labels.filter(F.col("label") != F.col("id")).select(
+            F.col("id").alias(id_col)
+        )
+    else:
+        labels = connected_component_labels(pairs)
+        # scores only for docs that are IN a component (inner join);
+        # everything outside the pair graph survives untouched
+        members = df.join(
+            labels.select(F.col("id").alias(id_col), "label"), id_col
+        ).select(F.col(id_col), F.col("label"), score.alias("_score"))
+        w = Window.partitionBy("label").orderBy(
+            F.desc_nulls_last("_score"), F.asc(id_col)
+        )
+        losers = (
+            members.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") > 1)
+            .select(id_col)
+        )
+    return df.join(losers, id_col, "left_anti")
+
+
+def _flagged_left_ids(pairs: DataFrame, id_col: str) -> DataFrame:
+    """Distinct ``left_id``s of a cross-corpus pair list, as ``id_col``."""
+    return pairs.select(F.col("left_id").alias(id_col)).distinct()
+
+
+def _subtract_flagged(
+    left: DataFrame, pairs: DataFrame, id_col: str,
+) -> DataFrame:
+    """``left`` minus its flagged ids — the one cross-corpus subtract
+    step: a single anti-join, AQE-broadcastable because matches are
+    rare."""
+    return left.join(_flagged_left_ids(pairs, id_col), id_col, "left_anti")
+
+
 def dedup_near(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     threshold: float = 0.8, survivors: str = "chain",
@@ -649,51 +736,22 @@ def dedup_near(
     smallest id for determinism.  Same closure cost as 'component'
     plus one small window over component members only.
     """
-    if survivors not in ("chain", "component", "best"):
-        raise ValueError(
-            f"survivors must be 'chain', 'component', or 'best', "
-            f"got {survivors!r}"
-        )
+    _check_survivors(survivors, ("chain", "component", "best"))
     if score is not None and survivors != "best":
         raise ValueError("score= only applies to survivors='best'")
     pairs = near_duplicate_pairs(df, text_col, id_col, threshold)
-    if survivors == "chain":
-        losers = pairs.select(F.col("id_b").alias(id_col))
-        return df.join(losers, id_col, "left_anti")
-    if survivors == "best":
-        from pyspark.sql import Window
+    if survivors == "best" and score is None:
+        from wikiextractor_spark.functions.textstats import quality_score
 
-        if score is None:
-            from wikiextractor_spark.functions.textstats import quality_score
-
-            # empty-text docs DO form components (the whole-text
-            # shingle fallback gives identical signatures), and the
-            # quality ratios divide by the text length — guard them to
-            # NULL, which desc_nulls_last ranks below every real score
-            score = F.when(
-                F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0,
-                quality_score(text_col),
-            )
-        labels = connected_component_labels(pairs)
-        # scores only for docs that are IN a component (inner join);
-        # everything outside the pair graph survives untouched
-        members = df.join(
-            labels.select(F.col("id").alias(id_col), "label"), id_col
-        ).select(F.col(id_col), F.col("label"), score.alias("_score"))
-        w = Window.partitionBy("label").orderBy(
-            F.desc_nulls_last("_score"), F.asc(id_col)
+        # empty-text docs DO form components (the whole-text shingle
+        # fallback gives identical signatures), and the quality ratios
+        # divide by the text length — guard them to NULL, which
+        # desc_nulls_last ranks below every real score
+        score = F.when(
+            F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0,
+            quality_score(text_col),
         )
-        losers = (
-            members.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") > 1)
-            .select(id_col)
-        )
-        return df.join(losers, id_col, "left_anti")
-    labels = connected_component_labels(pairs)
-    losers = labels.filter(F.col("label") != F.col("id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
+    return _drop_losers(df, pairs, id_col, survivors, score)
 
 
 def simhash_block_rows(
@@ -706,11 +764,7 @@ def simhash_block_rows(
     text) for a kept corpus and hand it to
     :func:`cross_corpus_near_pairs` via ``right_blocks`` so
     incremental runs never re-signature the kept side."""
-    src = spread_for_compute(df.select(id_col, text_col))
-    sigs = simhash64(src, text_col, id_col)
-    return simhash_blocks(sigs, id_col, max_distance + 1, 64).localCheckpoint(
-        eager=True
-    )
+    return _simhash_block_rows(df, text_col, id_col, max_distance, 64)
 
 
 def cross_corpus_near_pairs(
@@ -724,12 +778,9 @@ def cross_corpus_near_pairs(
     :func:`simhash_candidate_pairs` (did any training doc leak into
     the new crawl?  which docs of corpus B near-copy corpus A?).
 
-    Same pigeonhole topology: both sides get narrow 64-bit signatures
-    and block rows; candidates come from ONE equi-join on
-    (block_idx, block_val) ACROSS the corpora — never left × right —
-    and the exact ``bit_count`` re-check runs before the distinct.
-    Unlike the self-join variant there is no id ordering between
-    sides, so every (left, right) match is reported once.
+    The self-join's pigeonhole topology run ACROSS the corpora (never
+    left × right); with no id ordering between sides, every (left,
+    right) match is reported once.
 
     ``right_blocks`` accepts PRECOMPUTED block rows for the kept side
     (:func:`simhash_block_rows`, persisted once) so incremental-crawl
@@ -741,31 +792,13 @@ def cross_corpus_near_pairs(
     if (right is None) == (right_blocks is None):
         raise ValueError("give exactly one of right / right_blocks")
 
-    lb = simhash_block_rows(left, text_col, id_col, max_distance).alias("l")
+    lb = simhash_block_rows(left, text_col, id_col, max_distance)
     rb = (
         right_blocks
         if right_blocks is not None
         else simhash_block_rows(right, text_col, id_col, max_distance)
-    ).alias("r")
-    ham = F.bit_count(
-        F.col("sim_left").bitwiseXOR(F.col("sim_right"))
-    ).cast("int")
-    return (
-        lb.join(
-            rb,
-            (F.col("l.block_idx") == F.col("r.block_idx"))
-            & (F.col("l.block_val") == F.col("r.block_val")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("left_id"),
-            F.col(f"r.{id_col}").alias("right_id"),
-            F.col("l.simhash").alias("sim_left"),
-            F.col("r.simhash").alias("sim_right"),
-        )
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_distance)
-        .distinct()
     )
+    return _hamming_pairs(lb, rb, id_col, max_distance).distinct()
 
 
 def subtract_near_duplicates(
@@ -783,15 +816,14 @@ def subtract_near_duplicates(
     For repeated incremental runs, persist the kept side's block rows
     once (:func:`simhash_block_rows`) and pass ``right_blocks`` — the
     kept corpus is then never re-signatured."""
-    flagged = (
+    return _subtract_flagged(
+        left,
         cross_corpus_near_pairs(
             left, right, text_col, id_col, max_distance,
             right_blocks=right_blocks,
-        )
-        .select(F.col("left_id").alias(id_col))
-        .distinct()
+        ),
+        id_col,
     )
-    return left.join(flagged, id_col, "left_anti")
 
 
 def minhash_band_rows(
@@ -832,10 +864,7 @@ def cross_corpus_jaccard_pairs(
     :func:`cross_corpus_near_pairs` for callers whose near-dup
     definition is token overlap rather than SimHash-Hamming.
 
-    Topology: both sides get banded MinHash rows; candidates come
-    from ONE equi-join on (band, band_hash) ACROSS the corpora —
-    never left × right — and only candidate pairs are verified.
-
+    The band join runs ACROSS the corpora (never left × right).
     Verification grain follows what the right side provides:
 
     * ``right`` (texts) → **exact** word-set Jaccard, computed only
@@ -860,7 +889,7 @@ def cross_corpus_jaccard_pairs(
     lb = minhash_band_rows(
         left, text_col, id_col, num_hashes, shingle, bands, rows_per_band,
         keep_sig=estimate,
-    ).alias("l")
+    )
     rb = (
         right_bands
         if estimate
@@ -868,49 +897,30 @@ def cross_corpus_jaccard_pairs(
             right, text_col, id_col, num_hashes, shingle, bands,
             rows_per_band, keep_sig=False,
         )
-    ).alias("r")
-    joined = lb.join(
-        rb,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.band_hash") == F.col("r.band_hash")),
     )
-
+    pairs = _bucket_pairs(
+        lb, rb, ("band", "band_hash"), id_col,
+        {"sig": "sig"} if estimate else None,
+    ).distinct()
     if estimate:
         # the sigs ARE the verification payload, so they ride
         # through the distinct
         est = (
             F.expr(
-                "size(filter(zip_with(sig_l, sig_r, (a, b) -> a <=> b),"
+                "size(filter(zip_with(sig_left, sig_right, (a, b) -> a <=> b),"
                 " x -> x))"
             )
             / F.lit(float(num_hashes))
         )
-        return (
-            joined.select(
-                F.col(f"l.{id_col}").alias("left_id"),
-                F.col(f"r.{id_col}").alias("right_id"),
-                F.col("l.sig").alias("sig_l"),
-                F.col("r.sig").alias("sig_r"),
-            )
-            .distinct()
-            .select("left_id", "right_id", F.round(est, 6).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    # exact mode: dedup the pair list on the narrow id columns and
-    # materialize it once (it feeds the id restrictions plus the
-    # intersection join inside the shared verifier; un-materialized
-    # each branch would re-run the band join)
-    pairs = (
-        joined.select(
-            F.col(f"l.{id_col}").alias("left_id"),
-            F.col(f"r.{id_col}").alias("right_id"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+        return pairs.select(
+            "left_id", "right_id", F.round(est, 6).alias("jaccard")
+        ).filter(F.col("jaccard") >= threshold)
+    # exact mode: materialize the pair list once (it feeds the id
+    # restrictions plus the intersection join inside the shared
+    # verifier; un-materialized each branch would re-run the band join)
     return _exact_jaccard_over_pairs(
-        pairs, left, right, "left_id", "right_id", text_col, id_col, threshold
+        pairs.localCheckpoint(eager=True), left, right, "left_id",
+        "right_id", text_col, id_col, threshold,
     )
 
 
@@ -928,12 +938,11 @@ def subtract_jaccard_duplicates(
     contract as :func:`subtract_near_duplicates`: persist the kept
     side's band rows once (:func:`minhash_band_rows`) and pass
     ``right_bands``."""
-    flagged = (
+    return _subtract_flagged(
+        left,
         cross_corpus_jaccard_pairs(
             left, right, text_col, id_col, num_hashes, shingle,
             bands, rows_per_band, threshold, right_bands=right_bands,
-        )
-        .select(F.col("left_id").alias(id_col))
-        .distinct()
+        ),
+        id_col,
     )
-    return left.join(flagged, id_col, "left_anti")

@@ -15,6 +15,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from wikiextractor_spark.operators.dedup import (
+    _bucket_pairs,
+    _check_survivors,
+    _drop_losers,
+    _flagged_left_ids,
+    _subtract_flagged,
+)
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -174,6 +182,31 @@ def _lsh_bucket_sql(vec_col: str, planes: list[list[int]]) -> str:
     """
 
 
+def _embedding_band_sketch(
+    emb: DataFrame, bands: int, planes_per_band: int, dim: int, seed: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """Materialized ``(id, band, bucket)`` rows — the one embedding
+    band sketch: ``bands`` hyperplane sets (seeded ``seed+b``) bucket
+    every vector in ONE narrow pass, checkpointed as the barrier
+    before ``dedup._bucket_pairs`` (see the ``dedup`` module
+    docstring)."""
+    band_structs = ", ".join(
+        f"struct({b} AS band, "
+        f"{_lsh_bucket_sql(vec_col, hyperplanes(planes_per_band, dim, seed + b))}"
+        f" AS bucket)"
+        for b in range(bands)
+    )
+    return (
+        emb.select(
+            F.col(id_col),
+            F.explode(F.expr(f"array({band_structs})")).alias("bb"),
+        )
+        .select(id_col, "bb.band", "bb.bucket")
+        .localCheckpoint(eager=True)
+    )
+
+
 def embedding_near_duplicate_pairs(
     emb: DataFrame, threshold: float = 0.98,
     bands: int = 4, planes_per_band: int = 8, dim: int = 64, seed: int = 42,
@@ -195,36 +228,10 @@ def embedding_near_duplicate_pairs(
 
     → ``(id_a, id_b, cos)`` with ``cos >= threshold``.
     """
-    band_structs = ", ".join(
-        f"struct({b} AS band, "
-        f"{_lsh_bucket_sql(vec_col, hyperplanes(planes_per_band, dim, seed + b))}"
-        f" AS bucket)"
-        for b in range(bands)
+    sketch = _embedding_band_sketch(
+        emb, bands, planes_per_band, dim, seed, id_col, vec_col
     )
-    # materialization barrier before the self-join: without it,
-    # projection collapse inlines the bucket expressions into both
-    # join sides (see dedup.minhash_lsh_candidate_pairs)
-    sketch = (
-        emb.select(
-            F.col(id_col),
-            F.explode(F.expr(f"array({band_structs})")).alias("bb"),
-        )
-        .select(id_col, "bb.band", "bb.bucket")
-        .localCheckpoint(eager=True)
-    )
-    a, b = sketch.alias("a"), sketch.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-    )
+    cand = _bucket_pairs(sketch, None, ("band", "bucket"), id_col)
     vecs = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
     va = vecs.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"))
     vb = vecs.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"))
@@ -250,23 +257,11 @@ def dedup_embeddings(
     ``'component'``: exactly one survivor per connected component via
     bounded min-label propagation), fed by the sub-quadratic
     banded-LSH candidate stage."""
-    if survivors not in ("chain", "component"):
-        raise ValueError(
-            f"survivors must be 'chain' or 'component', got {survivors!r}"
-        )
+    _check_survivors(survivors, ("chain", "component"))
     pairs = embedding_near_duplicate_pairs(
         emb, threshold, id_col=id_col, vec_col=vec_col, **lsh_kwargs
     )
-    if survivors == "chain":
-        losers = pairs.select(F.col("id_b").alias(id_col))
-        return emb.join(losers, id_col, "left_anti")
-    from wikiextractor_spark.operators.dedup import connected_component_labels
-
-    labels = connected_component_labels(pairs)
-    losers = labels.filter(F.col("label") != F.col("id")).select(
-        F.col("id").alias(id_col)
-    )
-    return emb.join(losers, id_col, "left_anti")
+    return _drop_losers(emb, pairs, id_col, survivors)
 
 
 def lsh_bucket_histogram(emb: DataFrame, **kwargs) -> DataFrame:
@@ -317,18 +312,15 @@ def semantic_dedup_pairs(
         F.col(id_col), F.col("centroid_id"),
         _as_double(F.col(vec_col)).alias("v"),
     )
-    a, b = base.alias("a"), base.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.centroid_id") == F.col("b.centroid_id"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        _bucket_pairs(
+            base, None, ("centroid_id",), id_col,
+            {"centroid_id": "centroid", "v": "v"},
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.centroid_id").alias("centroid_id"),
-            F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
+            "id_a", "id_b",
+            F.col("centroid_a").alias("centroid_id"),
+            F.round(cosine(F.col("v_a"), F.col("v_b")), 6).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -344,25 +336,11 @@ def semantic_dedup(
     scale pass ``centroids=`` trained once (or reuse a persisted IVF
     index's centroids via :func:`load_ivf_centroids`) so repeated runs
     never refit the quantizer."""
-    if survivors not in ("chain", "component"):
-        raise ValueError(
-            f"survivors must be 'chain' or 'component', got {survivors!r}"
-        )
+    _check_survivors(survivors, ("chain", "component"))
     pairs = semantic_dedup_pairs(
         emb, threshold, id_col=id_col, vec_col=vec_col, **cluster_kwargs
     )
-    if survivors == "chain":
-        losers = pairs.select(F.col("id_b").alias(id_col))
-        return emb.join(losers, id_col, "left_anti")
-    from wikiextractor_spark.operators.dedup import connected_component_labels
-
-    labels = connected_component_labels(
-        pairs.select("id_a", "id_b")
-    )
-    losers = labels.filter(F.col("label") != F.col("id")).select(
-        F.col("id").alias(id_col)
-    )
-    return emb.join(losers, id_col, "left_anti")
+    return _drop_losers(emb, pairs, id_col, survivors)
 
 
 # --------------------------------------------------------------------------
@@ -2071,12 +2049,9 @@ def cross_corpus_embedding_pairs(
     are paraphrase-level copies of the kept corpus / of a held-out
     benchmark, even when token-grain dedup misses the rewording.
 
-    Same banded hyperplane-LSH topology as
-    :func:`embedding_near_duplicate_pairs`, with both corpora
-    sketched under the SAME seeded planes so shared buckets are
-    comparable; candidates come from ONE (band, bucket) equi-join
-    ACROSS the corpora — never left × right — and exact cosine runs
-    on candidates only.  No id ordering between sides: every
+    The topology of :func:`embedding_near_duplicate_pairs` run ACROSS
+    the corpora, both sketched under the SAME seeded planes so shared
+    buckets are comparable.  No id ordering between sides: every
     (left, right) match reports once.
 
     No persisted-artifact variant here (unlike the text grains): the
@@ -2088,45 +2063,17 @@ def cross_corpus_embedding_pairs(
     → ``(left_id, right_id, cos)`` with ``cos >= threshold``.
     """
 
-    def _sketch(emb: DataFrame) -> DataFrame:
-        band_structs = ", ".join(
-            f"struct({b} AS band, "
-            f"{_lsh_bucket_sql(vec_col, hyperplanes(planes_per_band, dim, seed + b))}"
-            f" AS bucket)"
-            for b in range(bands)
-        )
-        # materialization barrier against projection collapse into the
-        # join (see embedding_near_duplicate_pairs)
-        return (
-            emb.select(
-                F.col(id_col),
-                F.explode(F.expr(f"array({band_structs})")).alias("bb"),
-            )
-            .select(id_col, "bb.band", "bb.bucket")
-            .localCheckpoint(eager=True)
-        )
-
     # r16 optimization (guide §2.6): the two sketch materializations
     # are independent eager jobs over different corpora — overlap
     # them on threads (sketch content unchanged)
     from concurrent.futures import ThreadPoolExecutor
 
+    shape = (bands, planes_per_band, dim, seed, id_col, vec_col)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fl = _pool.submit(_sketch, left)
-        _fr = _pool.submit(_sketch, right)
-        ls, rs = _fl.result().alias("l"), _fr.result().alias("r")
-    cand = (
-        ls.join(
-            rs,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("left_id"),
-            F.col(f"r.{id_col}").alias("right_id"),
-        )
-        .distinct()
-    )
+        _fl = _pool.submit(_embedding_band_sketch, left, *shape)
+        _fr = _pool.submit(_embedding_band_sketch, right, *shape)
+        ls, rs = _fl.result(), _fr.result()
+    cand = _bucket_pairs(ls, rs, ("band", "bucket"), id_col).distinct()
     lv = left.select(
         F.col(id_col).alias("left_id"), _as_double(F.col(vec_col)).alias("lv")
     )
@@ -2149,17 +2096,15 @@ def flagged_embedding_ids(
     id_col: str = "vec_id", vec_col: str = "embedding", **lsh_kwargs,
 ) -> DataFrame:
     """Distinct left-side ids with a cosine ≥ ``threshold`` near-copy
-    in ``right`` — the one flagged-set implementation behind
-    :func:`subtract_embedding_duplicates` and ``prepare_corpus``'s
-    semantic-decontamination stage (one anti-join target, one place
-    for the semantics to live)."""
-    return (
+    in ``right`` — ``prepare_corpus``'s semantic-decontamination
+    anti-join target, and the set :func:`subtract_embedding_duplicates`
+    removes (both through the shared ``dedup`` subtract step)."""
+    return _flagged_left_ids(
         cross_corpus_embedding_pairs(
             left, right, threshold, id_col=id_col, vec_col=vec_col,
             **lsh_kwargs,
-        )
-        .select(F.col("left_id").alias(id_col))
-        .distinct()
+        ),
+        id_col,
     )
 
 
@@ -2174,10 +2119,14 @@ def subtract_embedding_duplicates(
     semantic incremental-crawl dedup when ``right`` is the kept
     corpus.  One anti-join on the flagged-id set, AQE-broadcastable
     because matches are rare."""
-    flagged = flagged_embedding_ids(
-        left, right, threshold, id_col, vec_col, **lsh_kwargs
+    return _subtract_flagged(
+        left,
+        cross_corpus_embedding_pairs(
+            left, right, threshold, id_col=id_col, vec_col=vec_col,
+            **lsh_kwargs,
+        ),
+        id_col,
     )
-    return left.join(flagged, id_col, "left_anti")
 
 
 def hashed_embeddings(

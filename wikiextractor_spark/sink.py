@@ -38,18 +38,12 @@ def write_documents(
     out_dir: str,
     compress: bool = False,
     max_records_per_file: int | None = None,
-    num_files: int | None = None,
 ) -> None:
     """Write rendered records as text; bz2 when ``compress`` (the
     ``--compress`` flag, reference ``WikiExtractor.py:692``)."""
     writer = df.write.mode("overwrite")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if num_files:
-        df = df.repartition(num_files)
-        writer = df.write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if compress:
         writer = writer.option("compression", "bzip2")
     writer.text(out_dir)
@@ -198,10 +192,22 @@ def write_training_shards(
 
     Returns ``n_shards``.
     """
+    _shard_writer(df, n_shards, seed, id_col, tiebreak_cols).parquet(out_dir)
+    return n_shards
+
+
+def _shard_writer(
+    df: DataFrame, n_shards: int, seed: str, id_col: str,
+    tiebreak_cols: tuple[str, ...],
+):
+    """The one shard-order step behind both shard formats: order key
+    ``xxhash64(id, seed)``, shard ``pmod(key, n_shards)``, ONE exchange
+    on the shard id, a per-shard sort, and a ``shard_id=K/``-partitioned
+    overwrite writer for the caller to finish with its format."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     ord_key = F.xxhash64(F.col(id_col).cast("string"), F.lit(str(seed)))
-    (
+    return (
         df.withColumn("_ord", ord_key)
         .withColumn("shard_id", F.pmod(F.col("_ord"), F.lit(n_shards)).cast("int"))
         .repartition(n_shards, F.col("shard_id"))
@@ -209,9 +215,25 @@ def write_training_shards(
         .drop("_ord")
         .write.mode("overwrite")
         .partitionBy("shard_id")
-        .parquet(out_dir)
     )
-    return n_shards
+
+
+def _shard_dirs(spark, out_dir: str, shard_ids: list[int] | None) -> list[str]:
+    """``shard_id=K`` directories under ``out_dir`` — all, or the
+    requested ids — from an explicit FS listing; raises when nothing
+    matches, so a loader never trains on a valid 0-row frame."""
+    from wikiextractor_spark.fsutil import int_partition_dirs
+
+    dirs = int_partition_dirs(spark, f"{out_dir}/shard_id=*", "shard_id")
+    if shard_ids is not None:
+        want = set(shard_ids)
+        dirs = [(i, p) for i, p in dirs if i in want]
+    if not dirs:
+        raise ValueError(
+            f"no matching shard directories under {out_dir!r} "
+            f"(requested {sorted(set(shard_ids)) if shard_ids is not None else 'all'})"
+        )
+    return [p for _i, p in dirs]
 
 
 def read_training_shards(
@@ -225,18 +247,8 @@ def read_training_shards(
     unknown ids are simply absent.  Row order within a shard is the
     written order (parquet preserves it; one file per shard
     directory)."""
-    from wikiextractor_spark.fsutil import int_partition_dirs
-
-    dirs = int_partition_dirs(spark, f"{out_dir}/shard_id=*", "shard_id")
-    if shard_ids is not None:
-        want = set(shard_ids)
-        dirs = [(i, p) for i, p in dirs if i in want]
-    if not dirs:
-        raise ValueError(
-            f"no matching shard directories under {out_dir!r} "
-            f"(requested {sorted(set(shard_ids)) if shard_ids is not None else 'all'})"
-        )
-    return spark.read.option("basePath", out_dir).parquet(*[p for _i, p in dirs])
+    dirs = _shard_dirs(spark, out_dir, shard_ids)
+    return spark.read.option("basePath", out_dir).parquet(*dirs)
 
 
 def write_jsonl_shards(
@@ -267,20 +279,7 @@ def write_jsonl_shards(
     file on read; the JSONL SOURCE module's splittable-scan argument
     in reverse).  Complex columns (arrays, structs) serialize as
     JSON values — ids/packs export losslessly."""
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    ord_key = F.xxhash64(F.col(id_col).cast("string"), F.lit(str(seed)))
-    w = (
-        df.withColumn("_ord", ord_key)
-        .withColumn(
-            "shard_id", F.pmod(F.col("_ord"), F.lit(n_shards)).cast("int")
-        )
-        .repartition(n_shards, F.col("shard_id"))
-        .sortWithinPartitions("shard_id", "_ord", id_col, *tiebreak_cols)
-        .drop("_ord")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-    )
+    w = _shard_writer(df, n_shards, seed, id_col, tiebreak_cols)
     if compression is not None:
         w = w.option("compression", compression)
     w.json(out_dir)
@@ -303,24 +302,12 @@ def read_jsonl_shards(
     a second full pass, and a corrupt line must surface as NULL
     fields under the declared schema, not silently reshape the
     frame)."""
-    from wikiextractor_spark.fsutil import int_partition_dirs
-
-    dirs = int_partition_dirs(spark, f"{out_dir}/shard_id=*", "shard_id")
-    if shard_ids is not None:
-        want = set(shard_ids)
-        dirs = [(sid, d) for sid, d in dirs if sid in want]
-    if not dirs:
-        raise ValueError(
-            f"no matching shard directories under {out_dir!r} "
-            f"(requested "
-            f"{sorted(set(shard_ids)) if shard_ids is not None else 'all'})"
-        )
     return (
         spark.read.schema(schema)
         .option("basePath", out_dir)
         # a LIST, not varargs: DataFrameReader.json's second
         # positional parameter is the schema
-        .json([p for _i, p in dirs])
+        .json(_shard_dirs(spark, out_dir, shard_ids))
     )
 
 

@@ -208,22 +208,22 @@ def dedup_batch_against_store(
     :func:`near_dedup_documents_incremental`, shared with the
     streaming corpus-preparation flow."""
     from wikiextractor_spark.operators.dedup import (
+        _drop_losers,
+        _flagged_left_ids,
+        _hamming_pairs,
         simhash64,
+        simhash_block_rows,
         simhash_blocks,
-        simhash_candidate_pairs,
     )
 
     n_blocks = max_distance + 1
-    # in-batch chain dedup at the same Hamming grain
-    in_batch_losers = (
-        simhash_candidate_pairs(
-            batch_df, text_col=text_col, id_col=id_col,
-            max_distance=max_distance,
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
+    # in-batch chain dedup at the same Hamming grain; the anti-join
+    # needs only the loser ids, so the pairs skip their distinct
+    in_batch = _hamming_pairs(
+        simhash_block_rows(batch_df, text_col, id_col, max_distance),
+        None, id_col, max_distance,
     )
-    survivors = batch_df.join(in_batch_losers, id_col, "left_anti")
+    survivors = _drop_losers(batch_df, in_batch, id_col, "chain")
     sigs = simhash64(survivors, text_col, id_col).localCheckpoint(eager=True)
     b_blocks = (
         simhash_blocks(sigs, id_col=id_col, n_blocks=n_blocks, sig_bits=64)
@@ -243,21 +243,8 @@ def dedup_batch_against_store(
         spark, state_dir, batch_buckets, exclude_gen=batch_id
     )
     if s_blocks is not None:
-        dup_ids = (
-            b_blocks.alias("b")
-            .join(
-                s_blocks.alias("s"),
-                (F.col("b.block_idx") == F.col("s.block_idx"))
-                & (F.col("b.block_val") == F.col("s.block_val")),
-            )
-            .filter(
-                F.bit_count(
-                    F.col("b.simhash").bitwiseXOR(F.col("s.simhash"))
-                )
-                <= max_distance
-            )
-            .select(F.col(f"b.{id_col}").alias(id_col))
-            .distinct()
+        dup_ids = _flagged_left_ids(
+            _hamming_pairs(b_blocks, s_blocks, id_col, max_distance), id_col
         )
         survivors = survivors.join(dup_ids, id_col, "left_anti")
         b_blocks = b_blocks.join(dup_ids, id_col, "left_anti")
