@@ -1119,8 +1119,7 @@ def main(argv: list[str] | None = None) -> None:
             print(f"wrote {args.out}")
             return
         if args.parser == "line":
-            from pyspark.sql import functions as F
-
+            from wikiextractor_spark.pipeline import _clean_and_compact
             from wikiextractor_spark.sink import render_documents, write_documents
             from wikiextractor_spark.sources.dump import filter_pages
             from wikiextractor_spark.sources.lineparser import read_pages_lineparser
@@ -1128,7 +1127,6 @@ def main(argv: list[str] | None = None) -> None:
                 apply_vital_filter,
                 read_vital_titles,
             )
-            from wikiextractor_spark.udfs import make_clean_udf, make_compact_udf
 
             pages = filter_pages(
                 read_pages_lineparser(spark, args.infn).drop("page_id_raw"), cfg
@@ -1137,11 +1135,8 @@ def main(argv: list[str] | None = None) -> None:
                 read_vital_titles(spark, args.vitalfn) if args.vitalfn else None
             )
             pages = apply_vital_filter(pages, vital)
-            docs = pages.withColumn(
-                "cleaned", make_clean_udf(cfg)(F.col("text"))
-            ).withColumn("lines", make_compact_udf(cfg.keep_sections)(F.col("cleaned")))
             write_documents(
-                render_documents(docs),
+                render_documents(_clean_and_compact(pages, cfg)),
                 args.out,
                 compress=cfg.compress,
                 max_records_per_file=args.max_records_per_file,

@@ -14,7 +14,11 @@ Keeping one definition guarantees the two sides can't drift.  Every
 pattern uses only syntax with identical semantics in Java regex
 (Spark) and RE2 (DuckDB): inline ``(?is)`` flags, lazy quantifiers,
 ASCII ``\\w``/``\\W``, ``\\b``, character classes.  No backreferences
-(RE2 has none).
+(RE2 has none).  The external-link step keeps the reference's
+backtracking ``\\[\\w+.*? (.*?)\\]`` rather than ``textops``' linear
+form, because that form's equivalence rests on Python's ``.`` and
+Unicode ``\\w``: Java's ``.`` also stops at ``\\r``, ``\\u0085``,
+``\\u2028`` and ``\\u2029``, and this table's ``\\w`` is ASCII.
 
 Fidelity note: the reference batch-collects comment/tag spans over one
 snapshot then splices (``WikiExtractor.py:402-422``); this chain

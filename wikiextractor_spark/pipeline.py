@@ -26,6 +26,14 @@ from wikiextractor_spark.sources.vital import apply_vital_filter, read_vital_tit
 from wikiextractor_spark.udfs import make_clean_udf, make_compact_udf
 
 
+def _clean_and_compact(pages: DataFrame, cfg: ExtractorConfig) -> DataFrame:
+    """Kept pages → ``cleaned`` (the clean UDF on ``text``) and ``lines``
+    (the compact UDF on ``cleaned``)."""
+    return pages.withColumn("cleaned", make_clean_udf(cfg)(F.col("text"))).withColumn(
+        "lines", make_compact_udf(cfg.keep_sections)(F.col("cleaned"))
+    )
+
+
 def extract_documents(
     spark: SparkSession,
     dump_path: str,
@@ -42,12 +50,8 @@ def extract_documents(
     vital = read_vital_titles(spark, vital_path) if vital_path else None
     pages = apply_vital_filter(pages, vital)
 
-    clean_udf = make_clean_udf(cfg)
-    compact_udf = make_compact_udf(cfg.keep_sections)
-
     return (
-        pages.withColumn("cleaned", clean_udf(F.col("text")))
-        .withColumn("lines", compact_udf(F.col("cleaned")))
+        _clean_and_compact(pages, cfg)
         .withColumn(
             "url",
             F.format_string("%s?curid=%s", F.lit(prefix or ""), F.col("page_id")),

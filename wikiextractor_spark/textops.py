@@ -23,6 +23,28 @@ directly):
   guillemets ``Â«`` / ``Â»`` (``:436``), and the
   punctuation fixups use the fork's literal-sequence groups — near
   no-ops — not character classes (``:448-449``).
+
+Two steps run as single-pass rewrites of the reference's patterns;
+``tests/test_textops_equivalence.py`` fuzzes each against the
+reference form and pins the chain's outputs without the reference:
+
+* C5 ``\\[\\w[^\\n ]* ([^\\n\\]]*)\\]`` is the reference's
+  ``\\[\\w+.*? (.*?)\\]`` without its backtracking.  ``.`` stops only
+  at ``\\n``, so a match at ``[`` exists exactly when ``[\\w`` is
+  followed on the same line by a space and then a ``]``; the first
+  such space and the first ``]`` after it fix both the span and the
+  anchor.  The reference form retries every later space of a line
+  with no closing ``]``, quadratic in the line's length.
+* C14-C16 (comments, self-closing tags, ignored open and close tags)
+  are one alternation scanned once, where the reference runs one
+  ``finditer`` per pattern and splices all spans together.  Spans of
+  different patterns may overlap and are spliced as the reference
+  does, so ``clean_wikitext`` turns ``'a <!-- <b> --> c'`` into
+  ``'a --> c'`` and ``'x <b <i>> y'`` into ``'x > y'``.  A pattern
+  never overlaps itself (``finditer`` resumes at a match's end), so
+  the scan keeps a resume offset per pattern, keyed by the pattern
+  that matched: under ``IGNORECASE``, ``ı`` and ``İ`` match ``i``, so
+  the matched text does not name it.
 """
 
 from __future__ import annotations
@@ -43,8 +65,6 @@ from wikiextractor_spark.config import (
 # the UDF-side analog of Catalyst's per-task regex compilation).
 # --------------------------------------------------------------------------
 
-_COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
-
 _DISCARD_ELEMENT_RES = [
     re.compile(
         r"<\s*%s\b[^>]*>.*?<\s*/\s*%s>" % (tag, tag), re.DOTALL | re.IGNORECASE
@@ -52,21 +72,24 @@ _DISCARD_ELEMENT_RES = [
     for tag in DISCARD_ELEMENTS
 ]
 
-_SELF_CLOSING_RES = [
-    re.compile(r"<\s*%s\b[^/]*/\s*>" % tag, re.DOTALL | re.IGNORECASE)
-    for tag in SELF_CLOSING_TAGS
-]
 
+def _tag_span_re(ignored: tuple[str, ...]) -> re.Pattern:
+    """C14-C16 as one alternation: a comment, a self-closing tag, an
+    ignored open tag or an ignored close tag.  Each tag name is its own
+    group, so ``m.lastindex`` names the reference pattern that matched
+    (``None`` for a comment)."""
+    def names(tags: tuple[str, ...]) -> str:
+        return "|".join("(%s)" % t for t in tags)
 
-def _tag_pair(tag: str) -> tuple[re.Pattern, re.Pattern]:
-    return (
-        re.compile(r"<\s*%s\b[^>]*>" % tag, re.IGNORECASE),
-        re.compile(r"<\s*/\s*%s>" % tag, re.IGNORECASE),
+    return re.compile(
+        r"<(?:!--.*?-->|\s*(?:(?:%s)\b[^/]*/\s*>|(?:%s)\b[^>]*>|/\s*(?:%s)>))"
+        % (names(SELF_CLOSING_TAGS), names(ignored), names(ignored)),
+        re.DOTALL | re.IGNORECASE,
     )
 
 
-_IGNORED_TAG_RES = [_tag_pair(t) for t in IGNORED_TAGS]
-_IGNORED_TAG_RES_WITH_A = _IGNORED_TAG_RES + [_tag_pair("a")]
+_TAG_SPAN_RE = _tag_span_re(IGNORED_TAGS)
+_TAG_SPAN_RE_WITH_A = _tag_span_re(IGNORED_TAGS + ("a",))
 
 _PLACEHOLDER_RES = [
     (
@@ -80,7 +103,7 @@ _PLACEHOLDER_RES = [
 ]
 
 _PREFORMATTED_RE = re.compile(r"^ .*?$", re.MULTILINE)
-_EXTERNAL_LINK_RE = re.compile(r"\[\w+.*? (.*?)\]")
+_EXTERNAL_LINK_RE = re.compile(r"\[\w[^\n ]* ([^\n\]]*)\]")
 _EXTERNAL_LINK_NO_ANCHOR_RE = re.compile(r"\[\w+[&\]]*\]")
 _BOLD_ITALIC_RE = re.compile(r"'''''([^']*?)'''''")
 _BOLD_RE = re.compile(r"'''(.*?)'''")
@@ -183,6 +206,26 @@ def drop_spans(spans: list[tuple[int, int]], text: str) -> str:
     return "".join(pieces)
 
 
+def _tag_spans(text: str, keep_links: bool) -> list[tuple[int, int]]:
+    """C14-C16: the spans the reference's per-pattern ``finditer``
+    passes find, from one scan (see the module docstring).  A span
+    holding a ``<`` may hide another pattern's match, so the scan
+    resumes at that ``<``."""
+    spans: list[tuple[int, int]] = []
+    resume: dict[int | None, int] = {}
+    search = (_TAG_SPAN_RE if keep_links else _TAG_SPAN_RE_WITH_A).search
+    m = search(text)
+    while m:
+        start, end = m.span()
+        key = m.lastindex
+        if start >= resume.get(key, 0):
+            spans.append((start, end))
+            resume[key] = end
+        inner = text.find("<", start + 1, end)
+        m = search(text, end if inner < 0 else inner)
+    return spans
+
+
 # --------------------------------------------------------------------------
 # Entity unescape (reference WikiExtractor.py:205-220)
 # --------------------------------------------------------------------------
@@ -276,21 +319,9 @@ def clean_wikitext(
     text = unescape_entities(text)
     text = unescape_entities(text)
 
-    # C14-C16: span-batched removals — comments, self-closing tags,
-    # ignored open/close tags ('a' included unless keep_links)
-    spans: list[tuple[int, int]] = []
-    for m in _COMMENT_RE.finditer(text):
-        spans.append((m.start(), m.end()))
-    for pat in _SELF_CLOSING_RES:
-        for m in pat.finditer(text):
-            spans.append((m.start(), m.end()))
-    pairs = _IGNORED_TAG_RES if keep_links else _IGNORED_TAG_RES_WITH_A
-    for left, right in pairs:
-        for m in left.finditer(text):
-            spans.append((m.start(), m.end()))
-        for m in right.finditer(text):
-            spans.append((m.start(), m.end()))
-    text = drop_spans(spans, text)
+    # C14-C16: comments, self-closing tags, ignored open/close tags
+    # ('a' included unless keep_links), cut in one splice
+    text = drop_spans(_tag_spans(text, keep_links), text)
 
     # C17: discard-element content; ONE non-greedy pass per tag, so
     # nested same-tag content partially survives — by design
