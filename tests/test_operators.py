@@ -3436,11 +3436,11 @@ def test_pq_serving_guards(spark):
 
 
 def test_pq_broadcast_join_path_equals_stack_path(spark):
-    """Above broadcast_threshold the PQ search paths switch from
-    inlined stack branches to a broadcast (q_id, lut) join; both must
-    produce IDENTICAL rows (shared LUT math and score expression),
-    and the joined path must serve a 1000-query batch — the stack
-    path's generated SQL blows up codegen there (VERDICT r7)."""
+    """The PQ search paths score through one broadcast (q_id, lut)
+    frame.  Their rows equal the literal rows captured when an
+    inlined-stack path still existed beside it (both paths agreed
+    then), and the broadcast path serves a 1000-query batch — where
+    per-query inlined SQL blew up codegen (VERDICT r7)."""
     from wikiextractor_spark.operators.similarity import (
         ann_ivf_pq_topk,
         pq_encode,
@@ -3460,20 +3460,40 @@ def test_pq_broadcast_join_path_equals_stack_path(spark):
             for r in df.collect()
         )
 
-    stacked = pq_search(codes, books, queries, topk=4)
-    joined = pq_search(codes, books, queries, topk=4, broadcast_threshold=2)
-    assert rows(stacked) == rows(joined)
+    assert rows(pq_search(codes, books, queries, topk=4)) == [
+        (0, 0, 60.764737, 1), (0, 5, 60.764737, 2),
+        (0, 10, 60.764737, 3), (0, 15, 60.764737, 4),
+        (1, 6, 80.352723, 1), (1, 11, 79.19203, 4),
+        (1, 41, 79.555158, 2), (1, 46, 79.354569, 3),
+        (2, 2, 57.260265, 1), (2, 7, 57.260265, 2),
+        (2, 12, 57.260265, 3), (2, 17, 57.260265, 4),
+        (3, 18, 62.312171, 1), (3, 38, 62.19739, 2),
+        (3, 48, 61.967686, 3), (3, 53, 61.941471, 4),
+        (4, 4, 61.539302, 4), (4, 14, 61.703447, 3),
+        (4, 24, 61.783132, 1), (4, 49, 61.783132, 2),
+        (5, 0, 59.975082, 1), (5, 5, 59.975082, 2),
+        (5, 10, 59.975082, 3), (5, 15, 59.975082, 4),
+    ]
 
-    composed_s = ann_ivf_pq_topk(
+    composed = ann_ivf_pq_topk(
         emb, queries, topk=4, nprobe=3, n_centroids=6, m=8, k_sub=8,
     )
-    composed_j = ann_ivf_pq_topk(
-        emb, queries, topk=4, nprobe=3, n_centroids=6, m=8, k_sub=8,
-        broadcast_threshold=2,
-    )
-    assert rows(composed_s) == rows(composed_j)
+    assert rows(composed) == [
+        (0, 0, 1.0, 1), (0, 5, 0.983317, 3),
+        (0, 40, 0.983911, 2), (0, 55, 0.983255, 4),
+        (1, 1, 1.0, 1), (1, 6, 0.986472, 4),
+        (1, 16, 0.987689, 2), (1, 36, 0.987368, 3),
+        (2, 2, 1.0, 1), (2, 7, 0.979503, 2),
+        (2, 12, 0.974247, 4), (2, 47, 0.976507, 3),
+        (3, 3, 1.0, 1), (3, 28, 0.979494, 2),
+        (3, 38, 0.978613, 3), (3, 53, 0.978225, 4),
+        (4, 4, 1.0, 1), (4, 24, 0.980636, 2),
+        (4, 39, 0.979859, 4), (4, 49, 0.980215, 3),
+        (5, 0, 0.983317, 2), (5, 5, 1.0, 1),
+        (5, 25, 0.982421, 4), (5, 40, 0.982953, 3),
+    ]
 
-    # 1000-query batch through the joined path: completes and returns
+    # 1000-query batch through the broadcast path: completes and returns
     # exactly topk rows per query (the pin is "no codegen blowup")
     import random as _r
 
@@ -3758,8 +3778,9 @@ def test_sq8_constant_dimension_roundtrip(spark):
 def test_sq8_guards_and_broadcast_path(spark, emb):
     """Review findings r8: dim-mismatched or NULL-element code rows
     RAISE instead of silently vanishing from results; all-NULL
-    training dimensions raise the contract error; the >threshold
-    broadcast path equals the stack path exactly."""
+    training dimensions raise the contract error; the broadcast
+    scoring path returns the literal rows captured when an
+    inlined-stack path still existed beside it (both agreed then)."""
     from wikiextractor_spark.operators.similarity import (
         sq_encode,
         sq_search,
@@ -3779,19 +3800,21 @@ def test_sq8_guards_and_broadcast_path(spark, emb):
             for r in df.collect()
         )
 
-    stacked = sq_search(codes, sq, queries, topk=3)
-    joined = sq_search(codes, sq, queries, topk=3, broadcast_threshold=2)
-    assert rows(stacked) == rows(joined)
+    assert rows(sq_search(codes, sq, queries, topk=3)) == [
+        (0, 0, 1.000156, 1), (0, 12, 0.311302, 3), (0, 17, 0.335411, 2),
+        (1, 1, 1.000366, 1), (1, 14, 0.165582, 3), (1, 50, 0.196602, 2),
+        (2, 2, 1.001147, 1), (2, 24, 0.230624, 2), (2, 33, 0.186777, 3),
+        (3, 3, 1.000116, 1), (3, 32, 0.227831, 2), (3, 53, 0.217077, 3),
+    ]
 
-    # a short-codes row raises on BOTH paths
+    # a short-codes row raises
     short = spark.createDataFrame(
         [(999, [0] * 32)], "vec_id long, codes array<int>"
     ).select("vec_id", F.expr("transform(codes, c -> cast(c as tinyint))")
              .alias("codes"))
-    for kw in ({}, {"broadcast_threshold": 0}):
-        with pytest.raises(Exception, match="does not match"):
-            sq_search(codes.unionByName(short), sq, queries[:1],
-                      topk=3, **kw).collect()
+    with pytest.raises(Exception, match="does not match"):
+        sq_search(codes.unionByName(short), sq, queries[:1],
+                  topk=3).collect()
 
     # all-NULL training dimension
     null_dim = corpus.select(
@@ -3831,11 +3854,9 @@ def test_pq_codes_shape_guard_raises(spark, emb, tmp_path):
         [(902, [0] * 7 + [None])], "vec_id long, codes array<int>"
     )
     for bad in (short, nulled):
-        # both serving paths: inlined stack and broadcast join
-        for kw in ({}, {"broadcast_threshold": 0}):
-            with pytest.raises(Exception, match="does not match"):
-                pq_search(codes.unionByName(bad), books, queries[:1],
-                          topk=3, **kw).collect()
+        with pytest.raises(Exception, match="does not match"):
+            pq_search(codes.unionByName(bad), books, queries[:1],
+                      topk=3).collect()
 
     # persisted path: a corrupt codes row planted INSIDE the index
     # partitions must raise at serving time, not vanish

@@ -136,6 +136,28 @@ def test_ann_broadcasts_queries(spark, sf_dir):
         shutil.rmtree(index_dir, ignore_errors=True)
 
 
+@pytest.mark.parametrize("fn_name", ["ann_ivf_topk", "ann_lsh_topk"])
+def test_ann_topk_one_corpus_projection(spark, sf_dir, fn_name):
+    """The in-memory IVF and LSH top-k carry the bucket (centroid or
+    LSH bucket) in the same projection as the vector: the plan scans
+    the corpus twice — candidates and query rows — and has one join,
+    the broadcast probe equi-join.  Joining a narrow ``(id, bucket)``
+    projection back onto the corpus would add two scans and two
+    corpus-grain joins."""
+    import re
+
+    from wikiextractor_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    kw = {}
+    if fn_name == "ann_ivf_topk":
+        cents = similarity.ivf_centroids(emb, k=4, iters=0)
+        kw = {"nprobe": 2, "centroids": cents}
+    p = plan_of(getattr(similarity, fn_name)(emb, [0, 1], k=3, **kw))
+    assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 2
+    assert len(re.findall(r"\(\d+\) \w*Join", p)) == 1
+
+
 def test_native_clean_no_python(spark, sf_dir):
     p = plan_of(REGISTRY["wx_clean_native"][0](spark, sf_dir))
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p

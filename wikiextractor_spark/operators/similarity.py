@@ -13,7 +13,9 @@ to 6 decimals so results are engine-portable (DuckDB oracle parity).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from wikiextractor_spark.operators.dedup import (
     _bucket_pairs,
@@ -42,6 +44,17 @@ def norm(a):
 
 def cosine(a, b):
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def _rank_topk(scored: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """Each query's top-``k`` rows by ``score`` (ties to the smaller
+    ``neighbor_id``), numbered 1..k in ``rank`` — the one window
+    top-k every search path here ends with."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
 
 
 def cosine_pairs(
@@ -86,11 +99,7 @@ def ann_brute_force_topk(
             F.round(cosine(F.col("q_v"), F.col("v")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 # --------------------------------------------------------------------------
@@ -515,6 +524,21 @@ def ivf_assign(
     )
 
 
+def _probe_centroids(vec_col: str, centroids: list[list[float]], nprobe: int):
+    """``q_centroid``: the ``nprobe`` centroids with the largest dot
+    product against ``vec_col`` (ties to the smaller index), exploded
+    one per row — the one probe selection behind every IVF search."""
+    scores = _centroid_scores_sql(vec_col, centroids)
+    return F.explode(
+        F.expr(
+            f"slice(transform(array_sort(zip_with({scores}, "
+            f"sequence(0, {len(centroids) - 1}), "
+            f"(s, i) -> struct(-s AS negs, i AS i))), "
+            f"p -> p.i), 1, {nprobe})"
+        )
+    ).alias("q_centroid")
+
+
 def ann_ivf_topk(
     emb: DataFrame, query_ids: list[int], k: int = 5, nprobe: int = 4,
     centroids: list[list[float]] | None = None,
@@ -533,27 +557,17 @@ def ann_ivf_topk(
     """
     if centroids is None:
         centroids = ivf_centroids(emb, n_centroids, iters, id_col, vec_col)
-    assigned = ivf_assign(emb, centroids, id_col, vec_col)
-    base = emb.join(assigned, id_col).select(
+    # one projection carries the assignment AND the vector — joining
+    # an (id, centroid_id) projection back to the corpus would scan it
+    # twice more and add a corpus-grain join
+    base = ivf_assign(emb, centroids, id_col, vec_col, keep_vec=True).select(
         F.col(id_col), F.col("centroid_id"),
         _as_double(F.col(vec_col)).alias("v"),
     )
-    scores = _centroid_scores_sql("v", centroids)
-    probes = (
-        base.filter(F.col(id_col).isin(query_ids))
-        .withColumn("_s", F.expr(scores))
-        .select(
-            F.col(id_col).alias("q_id"),
-            F.col("v").alias("q_v"),
-            F.explode(
-                F.expr(
-                    f"slice(transform(array_sort(zip_with(_s, "
-                    f"sequence(0, {len(centroids) - 1}), "
-                    f"(s, i) -> struct(-s AS negs, i AS i))), "
-                    f"p -> p.i), 1, {nprobe})"
-                )
-            ).alias("q_centroid"),
-        )
+    probes = base.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("q_id"),
+        F.col("v").alias("q_v"),
+        _probe_centroids("v", centroids, nprobe),
     )
     scored = (
         base.join(
@@ -567,11 +581,7 @@ def ann_ivf_topk(
             F.round(cosine(F.col("q_v"), F.col("v")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 def ann_lsh_topk(
@@ -582,9 +592,11 @@ def ann_lsh_topk(
     """Approximate top-k: candidates share the query's LSH bucket, so
     the scan joins on ``bucket`` instead of cross-joining the corpus.
     Recall < 1 by construction; compare with ann_brute_force_topk."""
-    buckets = lsh_bucket(emb, num_planes, dim, seed, id_col, vec_col)
-    base = emb.join(buckets, id_col).select(
-        F.col(id_col), F.col("bucket"), _as_double(F.col(vec_col)).alias("v")
+    planes = hyperplanes(num_planes, dim, seed)
+    base = emb.select(
+        F.col(id_col),
+        F.expr(_lsh_bucket_sql(vec_col, planes)).alias("bucket"),
+        _as_double(F.col(vec_col)).alias("v"),
     )
     queries = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("q_id"),
@@ -602,11 +614,7 @@ def ann_lsh_topk(
             F.round(cosine(F.col("q_v"), F.col("v")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 def ann_topk_blas(
@@ -671,11 +679,7 @@ def ann_topk_blas(
     scored = emb.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         score_batches, schema="q_id long, neighbor_id long, cos double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
 # --------------------------------------------------------------------------
@@ -1476,35 +1480,9 @@ def ann_ivf_topk_indexed(
     excluded like the non-PQ path.  ``use_sq=True``: same shape with
     the int8 scalar codec (dim bytes per row); mutually exclusive
     with ``use_pq`` per call."""
-    if refine < 1:
-        raise ValueError(f"refine must be >= 1, got {refine}")
-    if use_pq and use_sq:
-        raise ValueError(
-            "ann_ivf_topk_indexed: use_pq and use_sq are mutually "
-            "exclusive — pick one candidate representation per call"
-        )
-    # r16 optimization (guide §2.6): the centroids load, the PQ/SQ
-    # artifact load, and the home-centroid lookup + partition listing
-    # are three independent read-only steps over the frozen index
-    # (each a small driver-blocking Spark job) that ran in sequence —
-    # they overlap on threads.  Results are consumed in the ORIGINAL
-    # order (centroids, artifact validation, homes), so exception
-    # precedence is exactly what the sequential code raised; a
-    # misconfiguration (use_pq against a raw-vector index) still
-    # fails before any probe/rank work starts — the only change on
-    # that error path is that the concurrent assignments lookup ran
-    # wasted.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _load_artifact():
-        if use_pq:
-            return load_pq_books(spark, index_dir)
-        if use_sq:
-            return load_sq_codec(spark, index_dir)
-        return None
 
     def _home_paths():
-        # (1) the queries' home centroids: a filter on the 2-column
+        # the queries' home centroids: a filter on the 2-column
         # range-sorted lookup — tiny result, driver-collected
         q_homes = [
             r["centroid_id"]
@@ -1516,27 +1494,10 @@ def ann_ivf_topk_indexed(
         ]
         return _index_partition_paths(spark, index_dir, q_homes)
 
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        f_cent = _pool.submit(load_ivf_centroids, spark, index_dir)
-        f_art = _pool.submit(_load_artifact)
-        f_homes = _pool.submit(_home_paths)
-        centroids = f_cent.result()
-        _art = f_art.result()
-        books = _art if use_pq else None
-        if use_pq and books is None:
-            raise ValueError(
-                "ann_ivf_topk_indexed: use_pq=True but the index at "
-                f"{index_dir!r} has no pq_books — rebuild with "
-                "build_ivf_index(..., pq={...})"
-            )
-        codec = _art if use_sq else None
-        if use_sq and codec is None:
-            raise ValueError(
-                "ann_ivf_topk_indexed: use_sq=True but the index at "
-                f"{index_dir!r} has no sq_codec — rebuild with "
-                "build_ivf_index(..., sq=True)"
-            )
-        home_paths = f_homes.result()
+    centroids, codec, home_paths = _serving_setup(
+        spark, index_dir, "ann_ivf_topk_indexed", use_pq, use_sq, refine,
+        vec_col, _home_paths,
+    )
     if not home_paths:
         empty = spark.range(0)
         return empty.select(
@@ -1545,65 +1506,162 @@ def ann_ivf_topk_indexed(
             F.lit(0.0).alias("cos"),
             F.lit(1).alias("rank"),
         )
-    # (2) the query vectors, read from their home partitions only
+    # the query vectors, read from their home partitions only
     q_base = (
         spark.read.option("basePath", f"{index_dir}/vectors")
         .parquet(*home_paths)
         .filter(F.col(id_col).isin(query_ids))
         .select(
-            F.col(id_col), F.col("centroid_id"),
-            _as_double(F.col(vec_col)).alias("v"),
+            F.col(id_col).alias("q_id"),
+            _as_double(F.col(vec_col)).alias("q_v"),
         )
     )
-    probes = _probe_rows(
-        q_base.select(F.col(id_col).alias("q_id"), F.col("v").alias("q_v")),
-        centroids, nprobe,
-    )
-    if use_pq:
-        return _probe_and_rank_pq(
-            spark, index_dir, probes, books, k, refine, id_col, vec_col,
-            exclude_self=True,
-        )
-    if use_sq:
-        return _probe_and_rank_sq(
-            spark, index_dir, probes, codec, k, refine, id_col, vec_col,
-            exclude_self=True,
-        )
+    probes = _probe_rows(q_base, centroids, nprobe)
     return _probe_and_rank(
-        spark, index_dir, probes, k, id_col, vec_col,
+        spark, index_dir, probes, codec, k, refine, id_col, vec_col,
         exclude_self=True,
     )
 
 
+def _serving_setup(
+    spark, index_dir: str, caller: str, use_pq: bool, use_sq: bool,
+    refine: int, vec_col: str, home=None,
+):
+    """The preamble both persisted-index entry points share: the
+    ``refine`` and ``use_pq``/``use_sq`` checks, then the centroids,
+    the PQ/SQ artifact and the caller's ``home`` thunk (if any) loaded
+    concurrently — independent read-only steps over the frozen index,
+    each a small driver-blocking job.  Results are consumed in that
+    order, so a ``use_pq``/``use_sq`` call against an index without
+    the artifact fails before any probe work starts.  → ``(centroids,
+    codec, home())``, the codec being the candidate representation
+    the call scores."""
+    if refine < 1:
+        raise ValueError(f"refine must be >= 1, got {refine}")
+    if use_pq and use_sq:
+        raise ValueError(
+            f"{caller}: use_pq and use_sq are mutually exclusive — pick "
+            "one candidate representation per call"
+        )
+    from concurrent.futures import ThreadPoolExecutor
+
+    load = load_pq_books if use_pq else load_sq_codec if use_sq else None
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_cent = pool.submit(load_ivf_centroids, spark, index_dir)
+        f_art = pool.submit(load, spark, index_dir) if load else None
+        f_home = pool.submit(home) if home else None
+        centroids = f_cent.result()
+        art = f_art.result() if f_art else None
+        if load and art is None:
+            flag, name, build = (
+                ("use_pq", "pq_books", "pq={...}") if use_pq
+                else ("use_sq", "sq_codec", "sq=True")
+            )
+            raise ValueError(
+                f"{caller}: {flag}=True but the index at {index_dir!r} "
+                f"has no {name} — rebuild with build_ivf_index(..., {build})"
+            )
+        homes = f_home.result() if f_home else None
+    if use_pq:
+        codec = _pq_codec(art)
+    elif use_sq:
+        codec = _sq_codec(art, "sq_codes", "sq probe")
+    else:
+        codec = _raw_codec(vec_col)
+    return centroids, codec, homes
+
+
+def _validate_queries(queries, dim: int, caller: str) -> None:
+    """The one guard on caller-supplied query vectors: non-empty,
+    unique caller-space q_ids (the rank window would merge their
+    neighbor sets), every vector exactly ``dim``-dimensional — silent
+    truncation in the LUT/probe zips would otherwise return wrong
+    neighbors with no error."""
+    if not queries:
+        raise ValueError(f"{caller}: no query vectors — need at least one query")
+    ids = [q for q, _ in queries]
+    if len(set(ids)) != len(ids):
+        raise ValueError(
+            f"{caller}: duplicate q_ids — each query needs its own id, "
+            "or the rank window merges their neighbor sets"
+        )
+    for qid, qv in queries:
+        if len(qv) != dim:
+            raise ValueError(
+                f"{caller}: query {qid}: expected {dim}-dim vector, "
+                f"got {len(qv)} dims"
+            )
+
+
+def _query_frame(spark, queries: list[tuple[int, list[float]]]) -> DataFrame:
+    """``(q_id long, q_v array<double>)`` local frame of driver-side
+    query vectors, the input of :func:`_probe_rows`."""
+    from wikiextractor_spark.localframe import local_rows_df
+
+    return local_rows_df(
+        spark,
+        [(int(q), [float(x) for x in v]) for q, v in queries],
+        "q_id long, q_v array<double>",
+    )
+
+
+class _Codec(NamedTuple):
+    """What one candidate representation supplies to the shared
+    scorers: the per-query params (``params(q_v)`` → a tuple under
+    ``params_ddl``, computed driver-side), the ``codes`` column read
+    off the candidate scan, and the score expression over ``codes``
+    and the params.  ``exact`` marks raw vectors, whose scores are
+    the final cosines — the quantized codecs' scores only pick the
+    shortlist that :func:`_exact_rerank_shortlist` re-ranks."""
+
+    params_ddl: str
+    params: Callable
+    codes: Column
+    score: Column
+    exact: bool = False
+
+
+def _raw_codec(vec_col: str) -> _Codec:
+    return _Codec(
+        "q_v array<double>", lambda qv: (qv,),
+        _as_double(F.col(vec_col)).alias("codes"),
+        cosine(F.col("q_v"), F.col("codes")), exact=True,
+    )
+
+
+def _pq_codec(books: list[list[list[float]]]) -> _Codec:
+    return _Codec(
+        "lut array<array<double>>", lambda qv: (_pq_lut(books, qv),),
+        F.expr(_pq_guarded_codes_sql(len(books))).alias("codes"),
+        F.expr(_PQ_LUT_SCORE),
+    )
+
+
+def _sq_codec(sq: list[tuple[float, float]], col: str, caller: str) -> _Codec:
+    return _Codec(
+        "base double, w array<double>", lambda qv: _sq_query_params(sq, qv),
+        F.expr(_sq_guarded_codes_sql(col, len(sq), caller)).alias("codes"),
+        F.expr(_SQ_FOLD_SCORE),
+    )
+
+
 class _Probes:
-    """Driver-materialized probe rows (r16 optimization, guide §1.2):
-    probes are tiny by construction (queries × nprobe), and the
-    serving paths used to run THREE separate collect jobs over the
-    checkpointed probe frame (bucket distinct, (q_id, q_v) distinct,
-    and the broadcast evaluation) — one collect here feeds them all.
-    ``df`` is the probe frame as a local relation (same rows, same
-    schema, broadcast-joined exactly like the checkpointed frame
-    was); ``buckets`` the distinct probed centroids (sorted — the
-    former ``distinct().collect()`` order was nondeterministic);
-    ``qvecs`` the per-query vectors sorted by q_id; ``qdf`` the
-    ``(q_id, q_v)`` frame the rerank tail broadcasts."""
+    """Driver-materialized probe rows: probes are tiny by construction
+    (queries × nprobe), and one collect feeds every consumer —
+    ``buckets`` the distinct probed centroids (sorted), ``qvecs`` the
+    per-query vectors sorted by q_id, ``qdf`` the ``(q_id, q_v)``
+    frame the rerank tail broadcasts, and :meth:`side` the broadcast
+    side of the probe join.  Frames keep the SOURCE frame's q_id
+    type, so non-long id columns neither raise nor silently change
+    the join type downstream."""
 
     def __init__(self, spark, rows, schema):
         from pyspark.sql.types import StructType
 
         from wikiextractor_spark.localframe import local_rows_df
 
+        self.spark = spark
         self.rows = rows
-        # the probe frame is rebuilt under the SOURCE frame's schema
-        # (r16 ADVICE): q_id keeps its original type instead of a
-        # hardcoded long + int() coercion, so non-long id columns
-        # neither raise nor silently change the join type downstream
-        self.df = local_rows_df(
-            spark,
-            [(r["q_id"], list(r["q_v"]), int(r["q_centroid"]))
-             for r in rows],
-            schema,
-        )
         self.buckets = sorted({int(r["q_centroid"]) for r in rows})
         by_id = {}
         for r in rows:
@@ -1613,88 +1671,95 @@ class _Probes:
             spark, self.qvecs,
             StructType([schema["q_id"], schema["q_v"]]),
         )
-        # the source q_id type, for every downstream frame that joins
-        # back onto the probe frame (LUT/affine-param attach) — a
-        # hardcoded long there would re-introduce the coercion this
-        # class stopped making (r16 ADVICE, second pass)
         self.id_type_ddl = schema["q_id"].dataType.simpleString()
+
+    def side(self, codec: _Codec) -> DataFrame:
+        """``(q_id, q_centroid, *params)``, one row per probe row, with
+        each query's params computed once."""
+        from wikiextractor_spark.localframe import local_rows_df
+
+        params = {q: codec.params(v) for q, v in self.qvecs}
+        return local_rows_df(
+            self.spark,
+            [(r["q_id"], int(r["q_centroid"])) + params[r["q_id"]]
+             for r in self.rows],
+            f"q_id {self.id_type_ddl}, q_centroid int, {codec.params_ddl}",
+        )
 
 
 def _probe_rows(
     queries: DataFrame, centroids: list[list[float]], nprobe: int,
 ) -> _Probes:
     """``(q_id, q_v)`` → exploded ``(q_id, q_v, q_centroid)`` probe
-    rows: each query's top-``nprobe`` centroids by dot product, ties
-    to the smaller index.  ONE implementation (the SQL expression)
-    behind both persisted-index search paths — member-id queries and
-    external vectors — so probe selection can never drift between
-    them.  Materialized with ONE driver collect into :class:`_Probes`
-    (probes are tiny and feed several plan branches + driver-side
-    bucket/LUT derivations that each used to pay their own job)."""
-    scores = _centroid_scores_sql("q_v", centroids)
-    exploded = (
-        queries.withColumn("_s", F.expr(scores))
-        .select(
-            "q_id",
-            "q_v",
-            F.explode(
-                F.expr(
-                    f"slice(transform(array_sort(zip_with(_s, "
-                    f"sequence(0, {len(centroids) - 1}), "
-                    f"(s, i) -> struct(-s AS negs, i AS i))), "
-                    f"p -> p.i), 1, {nprobe})"
-                )
-            ).alias("q_centroid"),
-        )
+    rows (:func:`_probe_centroids`), materialized with ONE driver
+    collect into :class:`_Probes` — the probe set behind every
+    persisted-index search and :func:`ann_ivf_pq_topk`, so probe
+    selection can never drift between them."""
+    exploded = queries.select(
+        "q_id", "q_v", _probe_centroids("q_v", centroids, nprobe)
     )
     return _Probes(
         queries.sparkSession, exploded.collect(), exploded.schema
     )
 
 
-def _probe_and_rank(
-    spark, index_dir: str, probes: _Probes, k: int,
-    id_col: str, vec_col: str, exclude_self: bool,
+def _score_probes(
+    scan: DataFrame, probes: _Probes, codec: _Codec, id_col: str,
+    exclude_self: bool, out: str,
 ) -> DataFrame:
-    """Shared probe-partition scan + exact-cosine ranking behind the
-    two persisted-index search paths: ``probes`` is the TINY
-    driver-materialized probe set (``(q_id, q_v array<double>,
-    q_centroid)`` rows), and only the union of its centroid
-    partitions is read (explicit directory selection).
-    ``exclude_self`` drops the corpus row whose id equals ``q_id`` —
-    right for corpus-member queries, wrong for external vectors
-    whose ids live in a different id space."""
+    """Score the candidate rows ``(id, centroid_id, codes)`` of
+    ``scan`` against the broadcast probe side — an equi-join on the
+    centroid id, never a cross join over the corpus — into ``(q_id,
+    neighbor_id, <out>)``.  ``exclude_self`` drops the corpus row whose
+    id equals ``q_id`` — right for corpus-member queries, wrong for
+    external vectors whose ids live in a different id space."""
+    cond = F.col("centroid_id") == F.col("q_centroid")
+    if exclude_self:
+        cond = cond & (F.col(id_col) != F.col("q_id"))
+    return scan.join(F.broadcast(probes.side(codec)), cond).select(
+        "q_id", F.col(id_col).alias("neighbor_id"),
+        F.round(codec.score, 6).alias(out),
+    )
+
+
+def _probe_and_rank(
+    spark, index_dir: str, probes: _Probes, codec: _Codec, k: int,
+    refine: int, id_col: str, vec_col: str, exclude_self: bool,
+) -> DataFrame:
+    """The one persisted-index scorer: only the union of the probed
+    centroid partitions is read (explicit directory selection),
+    column-pruned to ``(id, centroid_id, codes)`` — the dim-float
+    vector for raw search, m ints per row for PQ (the 64× cut
+    reaching disk), dim bytes per row for SQ — and scored against
+    the broadcast probe side.  Raw cosines are ranked directly; a
+    quantized score only picks each query's ``k·refine`` shortlist,
+    which :func:`_exact_rerank_shortlist` re-ranks over raw vectors
+    fetched from the same partitions.  Persisted codes are external
+    input at serving time (an index mutated outside ``ivf_index_add``
+    could carry short/NULL rows), so the codec's codes column is
+    shape-guarded: such a row raises instead of silently vanishing.
+
+    → ``(q_id, neighbor_id, cos, rank)`` with ``rank <= k``."""
     paths = _index_partition_paths(spark, index_dir, probes.buckets)
     if not paths:
-        return probes.df.select(
+        return probes.qdf.select(
             F.col("q_id"),
             F.col("q_id").alias("neighbor_id"),
             F.lit(0.0).alias("cos"),
             F.lit(1).alias("rank"),
         ).limit(0)
-    pruned = (
-        spark.read.option("basePath", f"{index_dir}/vectors")
-        .parquet(*paths)
-        .select(
-            F.col(id_col), F.col("centroid_id"),
-            _as_double(F.col(vec_col)).alias("v"),
-        )
+    vectors = spark.read.option("basePath", f"{index_dir}/vectors").parquet(
+        *paths
     )
-    cond = F.col("centroid_id") == F.col("q_centroid")
-    if exclude_self:
-        cond = cond & (F.col(id_col) != F.col("q_id"))
-    scored = (
-        pruned.join(F.broadcast(probes.df), cond)
-        .select(
-            "q_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(F.col("q_v"), F.col("v")), 6).alias("cos"),
-        )
+    scan = vectors.select(F.col(id_col), F.col("centroid_id"), codec.codes)
+    scored = _score_probes(
+        scan, probes, codec, id_col, exclude_self,
+        "cos" if codec.exact else "score",
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    if codec.exact:
+        return _rank_topk(scored, k)
+    return _exact_rerank_shortlist(
+        scored, vectors, probes, k, refine, id_col, vec_col
     )
 
 
@@ -1736,209 +1801,57 @@ def ann_ivf_search_vectors(
     exclusive per call (one candidate representation per probe).
 
     → ``(q_id, neighbor_id, cos, rank)`` with ``rank <= k``."""
-    if not queries:
-        raise ValueError("ann_ivf_search_vectors: no query vectors")
-    if refine < 1:
-        raise ValueError(f"refine must be >= 1, got {refine}")
-    if use_pq and use_sq:
-        raise ValueError(
-            "ann_ivf_search_vectors: use_pq and use_sq are mutually "
-            "exclusive — pick one candidate representation per call"
-        )
-    qids = [q for q, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "ann_ivf_search_vectors: duplicate q_ids — each query needs "
-            "its own id, or the rank window merges their neighbor sets"
-        )
-    # r16 optimization (guide §2.6): the centroids load and the PQ/SQ
-    # artifact load are independent read-only collects over the
-    # frozen index — overlapped on threads, consumed in the original
-    # order so exception precedence and the fail-fast-before-probe
-    # contract are unchanged (same shape as ann_ivf_topk_indexed)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _load_artifact():
-        if use_pq:
-            return load_pq_books(spark, index_dir)
-        if use_sq:
-            return load_sq_codec(spark, index_dir)
-        return None
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        f_cent = _pool.submit(load_ivf_centroids, spark, index_dir)
-        f_art = _pool.submit(_load_artifact)
-        centroids = f_cent.result()
-        _art = f_art.result()
-    books = _art if use_pq else None
-    if use_pq and books is None:
-        raise ValueError(
-            "ann_ivf_search_vectors: use_pq=True but the index at "
-            f"{index_dir!r} has no pq_books — rebuild with "
-            "build_ivf_index(..., pq={...})"
-        )
-    codec = _art if use_sq else None
-    if use_sq and codec is None:
-        raise ValueError(
-            "ann_ivf_search_vectors: use_sq=True but the index at "
-            f"{index_dir!r} has no sq_codec — rebuild with "
-            "build_ivf_index(..., sq=True)"
-        )
-    dim = len(centroids[0])
-    for qid, vec in queries:
-        if len(vec) != dim:
-            raise ValueError(
-                f"ann_ivf_search_vectors: query {qid} has {len(vec)} dims, "
-                f"index centroids have {dim}"
-            )
-    from wikiextractor_spark.localframe import local_rows_df
-
-    q_frame = local_rows_df(
-        spark,
-        [(int(q), [float(x) for x in v]) for q, v in queries],
-        "q_id long, q_v array<double>",
+    caller = "ann_ivf_search_vectors"
+    centroids, codec, _ = _serving_setup(
+        spark, index_dir, caller, use_pq, use_sq, refine, vec_col,
     )
-    # probe selection goes through the SAME SQL expression the
-    # member-id path uses (_probe_rows) — identical buckets for
-    # identical vectors by construction, not by a mirrored Python
-    # reimplementation that could drift
-    probes = _probe_rows(q_frame, centroids, nprobe)
-    if use_pq:
-        return _probe_and_rank_pq(
-            spark, index_dir, probes, books, k, refine, id_col, vec_col,
-            exclude_self=False,
-        )
-    if use_sq:
-        return _probe_and_rank_sq(
-            spark, index_dir, probes, codec, k, refine, id_col, vec_col,
-            exclude_self=False,
-        )
+    _validate_queries(queries, len(centroids[0]), caller)
+    probes = _probe_rows(_query_frame(spark, queries), centroids, nprobe)
     return _probe_and_rank(
-        spark, index_dir, probes, k, id_col, vec_col,
+        spark, index_dir, probes, codec, k, refine, id_col, vec_col,
         exclude_self=False,
     )
 
 
-# same boundary idea as ann_ivf_pq_topk's broadcast_threshold, but
-# denominated in what actually inflates the plan: the INLINED ID
-# COUNT (queries × k × refine), not the query count — 200 queries at
-# k=100, refine=10 would inline 200k literals while passing a
-# query-count gate.  10240 = the r9 boundary's 256 queries at the
-# documented k=10, refine=4 serving shape.
+# Up to this many shortlist ids (queries × k × refine — the quantity
+# that actually inflates the plan, not the query count: 200 queries at
+# k=100, refine=10 would inline 200k literals) the rerank fetch is a
+# literal id IN-list.  10240 = 256 queries at the documented k=10,
+# refine=4 serving shape.
 _RERANK_ISIN_MAX_IDS = 10240
 
 
-def _probe_and_rank_pq(
-    spark, index_dir: str, probes: _Probes,
-    books: list[list[list[float]]],
-    k: int, refine: int, id_col: str, vec_col: str,
-    exclude_self: bool,
-) -> DataFrame:
-    """PQ-scored probe of a persisted index: the candidate scan reads
-    the probed partitions COLUMN-PRUNED to ``(id, codes)`` (m ints
-    per row — the 64× cut reaching disk), LUT-scores them against the
-    broadcast probe frame, shortlists ``k·refine`` ids per query,
-    then re-ranks with exact cosine over raw vectors fetched with a
-    pushed-down ``id IN (shortlist)`` filter — the shortlist is
-    driver-sized by construction (≤ queries × k × refine), so the
-    collect is an artifact read, not a data read.  Query vectors for
-    the LUTs come off the (tiny, materialized) probe frame itself, so
-    both serving paths — external vectors and corpus-member ids —
-    feed this unchanged."""
-    paths = _index_partition_paths(spark, index_dir, probes.buckets)
-    if not paths:
-        return probes.df.select(
-            F.col("q_id"),
-            F.col("q_id").alias("neighbor_id"),
-            F.lit(0.0).alias("cos"),
-            F.lit(1).alias("rank"),
-        ).limit(0)
-    lut_rows = [
-        (q_id, _pq_lut(books, q_v)) for q_id, q_v in probes.qvecs
-    ]
-    from wikiextractor_spark.localframe import local_rows_df
-
-    luts = local_rows_df(
-        spark, lut_rows,
-        f"q_id {probes.id_type_ddl}, lut array<array<double>>",
-    )
-    # probes already carries (q_id, q_centroid); attaching the LUT is
-    # a tiny driver-frame join, broadcast below as one unit
-    probe_luts = probes.df.select("q_id", "q_centroid").join(luts, "q_id")
-    codes_scan = (
-        spark.read.option("basePath", f"{index_dir}/vectors")
-        .parquet(*paths)
-        .select(
-            F.col(id_col), F.col("centroid_id"),
-            # persisted codes are external input at serving time
-            # (an index mutated outside ivf_index_add could carry
-            # short/NULL rows): shape-guard, don't silently drop
-            F.expr(_pq_guarded_codes_sql(len(books))).alias("codes"),
-        )
-    )
-    scored = (
-        codes_scan.join(
-            F.broadcast(probe_luts),
-            F.col("centroid_id") == F.col("q_centroid"),
-        )
-        .select(
-            "q_id", F.col(id_col).alias("neighbor_id"),
-            F.round(F.expr(_PQ_LUT_SCORE.format(lut="lut")), 6).alias(
-                "score"
-            ),
-        )
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("q_id"))
-    return _exact_rerank_shortlist(
-        spark, index_dir, paths, scored, probes, k, refine, id_col, vec_col,
-        n_queries=len(lut_rows),
-    )
-
-
 def _exact_rerank_shortlist(
-    spark, index_dir: str, paths: list[str], scored: DataFrame,
-    probes: _Probes, k: int, refine: int, id_col: str, vec_col: str,
-    n_queries: int = 0,
+    scored: DataFrame, vectors: DataFrame, probes: _Probes, k: int,
+    refine: int, id_col: str, vec_col: str,
 ) -> DataFrame:
-    """Shared tail of the quantized serving paths (PQ and SQ): rank
-    the approximate scores, keep each query's ``k·refine`` shortlist,
-    and re-rank it with EXACT cosine over raw vectors fetched from
-    the probed partitions.
+    """Shared tail of the quantized search paths (PQ and SQ, persisted
+    and in-memory): rank the approximate ``score``, keep each query's
+    ``k·refine`` shortlist, and re-rank it with EXACT cosine over the
+    raw vectors of ``vectors`` (the probed partitions, or the corpus).
 
-    Up to ``_RERANK_ISIN_MAX_IDS`` shortlist ids (queries × k ×
-    refine — the quantity that actually inflates the plan) the fetch
-    filter is a literal ``id IN (shortlist)`` — pushed down to
-    parquet, so row groups whose id stats exclude the shortlist never
-    decompress the vector column.  Above it the inlined literal list
-    would blow up the generated plan the same way
-    per-query LUT projections did before the r8 broadcast-LUT switch
-    (~40k literals at 1000 queries, k=10, refine=4), so the fetch
-    switches to a broadcast semi-join against the (already
-    materialized) shortlist frame: plan size stays O(1) in the query
-    count, trading the row-group pruning for a probe-bounded scan —
-    the probed partitions are already ≤ queries × nprobe directories,
-    so the scan stays bounded by the probe either way.  The shortlist
-    is driver-sized by construction, so the collect (small-batch
-    path) is an artifact read."""
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
+    Up to ``_RERANK_ISIN_MAX_IDS`` shortlist ids the fetch filter is a
+    literal ``id IN (shortlist)`` — pushed down to parquet, so row
+    groups whose id stats exclude the shortlist never decompress the
+    vector column.  Above it the inlined literal list would blow up
+    the generated plan (~40k literals at 1000 queries, k=10,
+    refine=4), so the fetch is a broadcast semi-join against the
+    (already materialized) shortlist frame: plan size stays O(1) in
+    the query count, trading the row-group pruning for a
+    probe-bounded scan.  The shortlist is driver-sized by
+    construction, so its collect is an artifact read.
+
+    → ``(q_id, neighbor_id, cos, rank)`` with ``rank <= k``."""
     shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * refine)
+        _rank_topk(scored, k * refine, "score")
         .select("q_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    vec_scan = (
-        spark.read.option("basePath", f"{index_dir}/vectors")
-        .parquet(*paths)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _as_double(F.col(vec_col)).alias("v"),
-        )
+    vec_scan = vectors.select(
+        F.col(id_col).alias("neighbor_id"),
+        _as_double(F.col(vec_col)).alias("v"),
     )
-    if n_queries * k * refine <= _RERANK_ISIN_MAX_IDS:
+    if len(probes.qvecs) * k * refine <= _RERANK_ISIN_MAX_IDS:
         cand_ids = [
             r["neighbor_id"]
             for r in shortlist.select("neighbor_id").distinct().collect()
@@ -1958,84 +1871,7 @@ def _exact_rerank_shortlist(
             F.round(cosine(F.col("q_v"), F.col("v")), 6).alias("cos"),
         )
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _probe_and_rank_sq(
-    spark, index_dir: str, probes: _Probes,
-    codec: list[tuple[float, float]],
-    k: int, refine: int, id_col: str, vec_col: str,
-    exclude_self: bool,
-) -> DataFrame:
-    """SQ-scored probe of a persisted index — the 4×-compression
-    sibling of :func:`_probe_and_rank_pq`: the candidate scan reads
-    the probed partitions COLUMN-PRUNED to ``(id, sq_codes)`` (dim
-    BYTES per row — the 4× cut vs float32 reaching disk), scores each
-    row with the affine fold ``base_q + Σ w_i·c_i`` against a
-    broadcast per-query ``(base, w)`` frame (no lookup tables —
-    :func:`_sq_query_params`), shortlists ``k·refine`` ids per query,
-    then exact-reranks the sliver exactly like the PQ path.  Bytes
-    read: the probed partitions' ``sq_codes`` column plus the
-    raw-vector row groups the shortlist id filter cannot prune —
-    never the vector column of the whole index."""
-    paths = _index_partition_paths(spark, index_dir, probes.buckets)
-    if not paths:
-        return probes.df.select(
-            F.col("q_id"),
-            F.col("q_id").alias("neighbor_id"),
-            F.lit(0.0).alias("cos"),
-            F.lit(1).alias("rank"),
-        ).limit(0)
-    dim = len(codec)
-    qparam_rows = [
-        (q_id,) + _sq_query_params(codec, q_v)
-        for q_id, q_v in probes.qvecs
-    ]
-    from wikiextractor_spark.localframe import local_rows_df
-
-    qparams = local_rows_df(
-        spark, qparam_rows,
-        f"q_id {probes.id_type_ddl}, base double, w array<double>",
-    )
-    probe_params = probes.df.select("q_id", "q_centroid").join(qparams, "q_id")
-    guarded = _sq_guarded_codes_sql("sq_codes", dim, "sq probe")
-    codes_scan = (
-        spark.read.option("basePath", f"{index_dir}/vectors")
-        .parquet(*paths)
-        .selectExpr(
-            id_col, "centroid_id",
-            # persisted codes are external input at serving time:
-            # shape-guard (raise, never NULL-drop), like the PQ scan
-            f"{guarded} as sq_codes",
-        )
-    )
-    scored = (
-        codes_scan.join(
-            F.broadcast(probe_params),
-            F.col("centroid_id") == F.col("q_centroid"),
-        )
-        .select(
-            "q_id", F.col(id_col).alias("neighbor_id"),
-            F.round(
-                F.expr(
-                    "base + aggregate(zip_with(sq_codes, w, "
-                    "(c, x) -> x * c), 0.0D, (acc, x) -> acc + x)"
-                ), 6,
-            ).alias("score"),
-        )
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("q_id"))
-    return _exact_rerank_shortlist(
-        spark, index_dir, paths, scored, probes, k, refine, id_col, vec_col,
-        n_queries=len(qparam_rows),
-    )
+    return _rank_topk(exact, k)
 
 
 def cross_corpus_embedding_pairs(
@@ -2353,7 +2189,7 @@ def _pq_lut(
 # is m table lookups.  NB bracket indexing `t[i]` is 0-BASED in Spark
 # SQL (element_at is the 1-based one) — codes are already 0-based.
 _PQ_LUT_SCORE = (
-    "aggregate(zip_with(codes, {lut}, (c, t) -> t[c]), "
+    "aggregate(zip_with(codes, lut, (c, t) -> t[c]), "
     "0.0D, (acc, x) -> acc + x)"
 )
 
@@ -2361,7 +2197,7 @@ _PQ_LUT_SCORE = (
 def _pq_guarded_codes_sql(m: int) -> str:
     """Shape guard applied ONCE where externally-supplied codes enter
     a PQ scoring plan (``pq_search``'s caller frame, the persisted
-    codes scan in ``_probe_and_rank_pq``): a row whose ``codes``
+    codes scan of ``_probe_and_rank``): a row whose ``codes``
     length differs from the codebook count, or that carries a NULL
     element, RAISES instead of NULL-scoring through
     ``zip_with``/``t[c]`` and silently vanishing from every shortlist
@@ -2375,151 +2211,60 @@ def _pq_guarded_codes_sql(m: int) -> str:
     )
 
 
-def _pq_stack_branches(
-    books: list[list[list[float]]],
-    queries: list[tuple[int, list[float]]],
-) -> list[str]:
-    """Per-query ``stack`` branches: q_id literal + LUT-sum score
-    expression over the ``codes`` column (one branch per query, all
-    evaluated in a single pass over the codes scan)."""
-    branches = []
-    for qid, qv in queries:
-        luts = _pq_lut(books, qv)
-        lut_sql = "array(%s)" % ", ".join(
-            "array(%s)" % ", ".join(f"{v}D" for v in row) for row in luts
-        )
-        branches.append(
-            f"{qid}L, " + _PQ_LUT_SCORE.format(lut=lut_sql)
-        )
-    return branches
-
-
-def _top_probe_centroids(
-    centroids: list[list[float]], qv: list[float], nprobe: int,
-) -> list[int]:
-    """Driver-side probe selection for the IN-MEMORY PQ paths (the
-    persisted-index paths use the ``_probe_rows`` SQL instead): the
-    query's top-``nprobe`` centroids by dot product, ties to the
-    smaller index.  ONE implementation behind both batch-size
-    branches of ``ann_ivf_pq_topk`` — a tie-break or metric edit in
-    a single copy would otherwise change neighbors depending on
-    whether the batch crosses ``broadcast_threshold``."""
-    scored_c = sorted(
-        ((sum(x * y for x, y in zip(qv, c)), i)
-         for i, c in enumerate(centroids)),
-        key=lambda t: (-t[0], t[1]),
-    )
-    return [i for _, i in scored_c[:nprobe]]
-
-
-def _pq_query_frame(
-    spark, books: list[list[list[float]]],
-    queries: list[tuple[int, list[float]]],
-    centroids: list[list[float]] | None = None, nprobe: int | None = None,
+def _flat_search(
+    codes: DataFrame, codec: _Codec, queries: list[tuple[int, list[float]]],
+    topk: int, id_col: str, exclude_self: bool,
 ) -> DataFrame:
-    """The BROADCAST side of the joined PQ-scoring path: one row per
-    query — ``(q_id, q_v, lut)`` — exploded to one row per (query,
-    probed centroid) when ``centroids``/``nprobe`` are given.  LUTs
-    are computed driver-side (m·k floats per query); the frame is
-    queries × nprobe rows, always broadcast-sized."""
-    rows = []
-    for qid, qv in queries:
-        lut = _pq_lut(books, qv)
-        if centroids is None:
-            rows.append((int(qid), [float(x) for x in qv], lut))
-        else:
-            for ci in _top_probe_centroids(centroids, qv, nprobe):
-                rows.append((int(qid), [float(x) for x in qv], lut, ci))
-    schema = "q_id long, q_v array<double>, lut array<array<double>>"
-    if centroids is not None:
-        schema += ", q_centroid int"
+    """The one flat quantized scorer behind :func:`pq_search` and
+    :func:`sq_search`: the guarded codes column, one BROADCAST
+    ``(q_id, *params)`` frame cross-joined against it (params are
+    driver-computed per query, so the generated SQL is constant-size
+    at any batch size — tested at 1000 queries), the codec's score
+    rounded to 6 decimals, then the per-query window top-k."""
     from wikiextractor_spark.localframe import local_rows_df
 
-    return local_rows_df(spark, rows, schema)
-
-
-def _validate_pq_queries(queries, dim: int) -> None:
-    """Shared guards for the PQ serving surface (mirrors
-    ann_ivf_search_vectors): non-empty, unique caller-space q_ids,
-    every vector exactly ``dim``-dimensional — silent truncation in
-    the LUT/probe zips would otherwise return wrong neighbors with
-    no error."""
-    if not queries:
-        raise ValueError("need at least one query")
-    ids = [q for q, _ in queries]
-    if len(set(ids)) != len(ids):
-        raise ValueError(f"duplicate q_ids in queries: {sorted(ids)}")
-    for qid, qv in queries:
-        if len(qv) != dim:
-            raise ValueError(
-                f"query {qid}: expected {dim}-dim vector, got {len(qv)}"
-            )
+    params = local_rows_df(
+        codes.sparkSession,
+        [(int(q),) + codec.params(v) for q, v in queries],
+        f"q_id long, {codec.params_ddl}",
+    )
+    scored = (
+        codes.select(F.col(id_col).alias("neighbor_id"), codec.codes)
+        .crossJoin(F.broadcast(params))
+        .select(
+            "q_id", "neighbor_id", F.round(codec.score, 6).alias("score")
+        )
+    )
+    if exclude_self:
+        scored = scored.filter(F.col("neighbor_id") != F.col("q_id"))
+    return _rank_topk(scored, topk, "score")
 
 
 def pq_search(
     codes: DataFrame, books: list[list[list[float]]],
     queries: list[tuple[int, list[float]]], topk: int = 5,
     id_col: str = "vec_id", exclude_self: bool = False,
-    broadcast_threshold: int = 256,
 ) -> DataFrame:
     """→ ``(q_id, neighbor_id, score, rank)``: asymmetric-distance
     top-k of each query against the COMPRESSED corpus.
 
     Per query the driver builds the m×k partial-dot lookup table
-    (m·k floats — trivially literal-sized); a database row's score is
-    ``Σ_j LUT[j][code_j]`` — m array lookups per (row, query).  All
-    queries score in ONE pass over the codes scan, then the same
-    per-query window top-k every ANN path here uses.  Scores
-    approximate the exact dot product with quantization error (see
-    :func:`train_pq` sizing).
-
-    Up to ``broadcast_threshold`` queries the scoring projection is a
-    ``stack`` with one inlined-LUT branch per query (zero joins);
-    above it, per-query branches would blow up the generated SQL and
-    codegen, so the LUTs ship as a BROADCAST ``(q_id, lut)`` frame
-    cross-joined against the codes — same q×n scored rows, query
-    count bounded only by broadcast size (tested at 1000).  Both
-    paths produce identical rows by construction (shared LUT math and
-    score expression; equality-tested).
+    (m·k floats); a database row's score is ``Σ_j LUT[j][code_j]`` —
+    m array lookups per (row, query).  The LUTs ship as one broadcast
+    ``(q_id, lut)`` frame, so all queries score in ONE pass over the
+    codes scan, then the same per-query window top-k every ANN path
+    here uses (:func:`_flat_search`).  Scores approximate the exact
+    dot product with quantization error (see :func:`train_pq`
+    sizing).  A ``codes`` row of the wrong length or with a NULL
+    element raises.
 
     Query ids live in the CALLER's id space: no self-exclusion by
     default (a new vector's id colliding with an unrelated corpus id
     must not silently drop a true neighbor); pass
     ``exclude_self=True`` when query ids ARE corpus ids."""
-    m = len(books)
-    sub = len(books[0][0])
-    _validate_pq_queries(queries, m * sub)
-    # caller-supplied codes: shape-guard once in the entry projection
-    # (sq_search parity) so a short/NULL row raises, never NULL-drops
-    guarded = codes.selectExpr(
-        f"{id_col} as neighbor_id", f"{_pq_guarded_codes_sql(m)} as codes"
-    )
-    if len(queries) > broadcast_threshold:
-        qframe = _pq_query_frame(codes.sparkSession, books, queries)
-        scored = (
-            guarded
-            .crossJoin(F.broadcast(qframe.select("q_id", "lut")))
-            .select(
-                "q_id", "neighbor_id",
-                F.round(
-                    F.expr(_PQ_LUT_SCORE.format(lut="lut")), 6
-                ).alias("score"),
-            )
-        )
-    else:
-        branches = _pq_stack_branches(books, queries)
-        scored = guarded.selectExpr(
-            "neighbor_id",
-            f"stack({len(branches)}, {', '.join(branches)}) as (q_id, score)",
-        ).withColumn("score", F.round("score", 6))
-    if exclude_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("q_id"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+    _validate_queries(queries, len(books) * len(books[0][0]), "pq_search")
+    return _flat_search(
+        codes, _pq_codec(books), queries, topk, id_col, exclude_self
     )
 
 
@@ -2532,7 +2277,6 @@ def ann_ivf_pq_topk(
     m: int = 16, k_sub: int = 16,
     id_col: str = "vec_id", vec_col: str = "embedding",
     exclude_self: bool = False,
-    broadcast_threshold: int = 256,
 ) -> DataFrame:
     """IVF-PQ with exact re-ranking: the canonical billion-scale ANN
     composition — the coarse quantizer prunes WHICH vectors are
@@ -2540,38 +2284,36 @@ def ann_ivf_pq_topk(
     buckets), product quantization bounds WHAT the candidate scan
     reads (m code ints, LUT-scored), and ``refine`` re-ranks the
     ``topk·refine`` PQ shortlist with exact cosine over raw vectors
-    fetched by ONE semi-join on that tiny id set (FAISS IVFPQR
-    shape).  Without re-ranking, tightly clustered points quantize
-    to IDENTICAL codes and within-cluster order degenerates to the
-    id tie-break — measured recall@5 ~0.3 (refine=1) vs ~0.9
-    (refine=4) on clustered data.
+    fetched by ONE filter on that tiny id set (FAISS IVFPQR shape).
+    Without re-ranking, tightly clustered points quantize to
+    IDENTICAL codes and within-cluster order degenerates to the id
+    tie-break — measured recall@5 ~0.3 (refine=1) vs ~0.9 (refine=4)
+    on clustered data; ``refine=1`` returns the PQ order and scores,
+    with no exact pass.
 
-    Batched plan: ONE pass over the materialized codes scores every
-    query (probe membership enforced per (query, centroid) inside
-    the same pass) and ONE scan of ``emb`` fetches all shortlist
-    vectors — corpus reads do not scale with query count.  Up to
-    ``broadcast_threshold`` queries the scoring is a stacked
-    projection with inlined LUT literals; above it, LUTs + probe
-    centroids ship as a broadcast frame equi-joined on the centroid
-    id, so the generated SQL stays constant-size at any batch size
-    (tested at 1000 queries; both paths equality-tested).  Index
-    artifacts (``centroids``, ``books``) are driver-sized; pass
-    pre-trained ones so repeated batches never refit.  Query ids are
-    caller-space (no self-exclusion unless ``exclude_self=True``,
-    like :func:`pq_search`)."""
+    Batched plan: the probes come from the same SQL as the persisted
+    index (:func:`_probe_rows`); per-query LUTs + probe centroids ship
+    as ONE broadcast frame equi-joined on the centroid id against the
+    materialized codes, so ONE pass scores every query and the
+    generated SQL stays constant-size at any batch size; ONE scan of
+    ``emb`` fetches all shortlist vectors — corpus reads do not scale
+    with query count.  Index artifacts (``centroids``, ``books``) are
+    driver-sized; pass pre-trained ones so repeated batches never
+    refit.  Query ids are caller-space (no self-exclusion unless
+    ``exclude_self=True``, like :func:`pq_search`)."""
     if refine < 1:
         raise ValueError(f"refine must be >= 1, got {refine}")
     if centroids is None:
         centroids = ivf_centroids(emb, n_centroids, iters, id_col, vec_col)
     dim = len(centroids[0])
-    _validate_pq_queries(queries, dim)
+    _validate_queries(queries, dim, "ann_ivf_pq_topk")
     if books is None:
         books = train_pq(
             emb, m=m, k=k_sub, iters=iters, id_col=id_col, vec_col=vec_col,
             dim=dim,
         )
     # one narrow pass carries assignment AND codes; materialize —
-    # every per-query probe filter reads this, not the raw corpus
+    # the probe join reads this, not the raw corpus
     coded = (
         ivf_assign(emb, centroids, id_col, vec_col, keep_vec=True)
         .select(
@@ -2580,87 +2322,17 @@ def ann_ivf_pq_topk(
         )
         .localCheckpoint(eager=True)
     )
-
-    spark = emb.sparkSession
-    if len(queries) > broadcast_threshold:
-        # joined path (large batches): per-query LUTs + probe
-        # centroids ship as ONE broadcast frame, equi-joined on the
-        # centroid id — the generated SQL stays constant-size however
-        # many queries the batch carries (per-query stack branches
-        # and OR-chained probe predicates blow up codegen past a few
-        # hundred queries)
-        qframe = _pq_query_frame(spark, books, queries, centroids, nprobe)
-        scored = (
-            coded.join(
-                F.broadcast(qframe.select("q_id", "lut", "q_centroid")),
-                F.col("centroid_id") == F.col("q_centroid"),
-            )
-            .select(
-                "q_id", F.col(id_col).alias("neighbor_id"),
-                F.round(
-                    F.expr(_PQ_LUT_SCORE.format(lut="lut")), 6
-                ).alias("score"),
-            )
-        )
-        if exclude_self:
-            scored = scored.filter(F.col("neighbor_id") != F.col("q_id"))
-    else:
-        # ONE pass over the materialized codes: all queries score via
-        # a stacked projection, and per-(query, centroid) probe
-        # membership is a predicate applied BEFORE any window —
-        # ranking only ever sees the probed slivers, never the full
-        # q×n score set
-        branches = _pq_stack_branches(books, queries)
-        stacked = coded.selectExpr(
-            f"{id_col} as neighbor_id", "centroid_id",
-            f"stack({len(branches)}, {', '.join(branches)}) as (q_id, score)",
-        ).withColumn("score", F.round("score", 6))
-        if exclude_self:
-            stacked = stacked.filter(F.col("neighbor_id") != F.col("q_id"))
-        probe_pred = None
-        for qid, qv in queries:
-            cond = (F.col("q_id") == qid) & F.col("centroid_id").isin(
-                _top_probe_centroids(centroids, qv, nprobe)
-            )
-            probe_pred = cond if probe_pred is None else (probe_pred | cond)
-        scored = stacked.filter(probe_pred).drop("centroid_id")
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
+    probes = _probe_rows(
+        _query_frame(emb.sparkSession, queries), centroids, nprobe
     )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk * refine)
+    scored = _score_probes(
+        coded, probes, _pq_codec(books), id_col, exclude_self, "score"
     )
     if refine == 1:
-        return shortlist.filter(F.col("rank") <= topk)
-    # the shortlist feeds two joins below — materialize the tiny
-    # (queries × topk × refine)-row set once
-    shortlist = shortlist.localCheckpoint(eager=True)
-    from wikiextractor_spark.localframe import local_rows_df
-
-    qdf = local_rows_df(
-        spark,
-        [(qid, [float(x) for x in qv]) for qid, qv in queries],
-        "q_id long, q_v array<double>",
-    )
-    cand_vecs = emb.join(
-        shortlist.select(F.col("neighbor_id").alias(id_col)).distinct(),
-        id_col, "left_semi",
-    ).select(F.col(id_col).alias("neighbor_id"),
-             _as_double(F.col(vec_col)).alias("v"))
-    exact = (
-        shortlist.select("q_id", "neighbor_id")
-        .join(cand_vecs, "neighbor_id")
-        .join(F.broadcast(qdf), "q_id")
-        .select(
-            "q_id", "neighbor_id",
-            F.round(cosine(F.col("q_v"), F.col("v")), 6).alias("score"),
-        )
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-    )
+        return _rank_topk(scored, topk, "score")
+    return _exact_rerank_shortlist(
+        scored, emb, probes, topk, refine, id_col, vec_col
+    ).withColumnRenamed("cos", "score")
 
 
 # --------------------------------------------------------------------------
@@ -2726,7 +2398,7 @@ def _sq_codec_sql(vec_col: str, sq: list[tuple[float, float]]) -> str:
 def _sq_guarded_codes_sql(col: str, dim: int, caller: str) -> str:
     """Shape guard for externally-supplied SQ codes (``sq_search``'s
     caller frame, the persisted ``sq_codes`` scan in
-    ``_probe_and_rank_sq``) — one implementation so the contract
+    ``_probe_and_rank``) — one implementation so the contract
     cannot drift between the flat and persisted serving paths, like
     :func:`_pq_guarded_codes_sql` for the PQ twin: a row whose codes
     length differs from the codec dim, or that carries a NULL
@@ -2764,11 +2436,18 @@ def _sq_query_params(
     return base + 128.0 * sum(w), w
 
 
+# ``base + Σ w_i·c_i``: a database row's SQ score, one fold over its
+# codes against the per-query affine params (:func:`_sq_query_params`).
+_SQ_FOLD_SCORE = (
+    "base + aggregate(zip_with(codes, w, (c, x) -> x * c), 0.0D, "
+    "(acc, x) -> acc + x)"
+)
+
+
 def sq_search(
     codes: DataFrame, sq: list[tuple[float, float]],
     queries: list[tuple[int, list[float]]], topk: int = 5,
     id_col: str = "vec_id", exclude_self: bool = False,
-    broadcast_threshold: int = 256,
 ) -> DataFrame:
     """→ ``(q_id, neighbor_id, score, rank)``: asymmetric top-k of
     each query against the int8-compressed corpus.
@@ -2777,14 +2456,12 @@ def sq_search(
     ``q·x̂ = base_q + Σ w_i·c_i`` with ``base_q``/``w`` driver-computed
     per query (:func:`_sq_query_params`), so a database row scores in
     one zip_with fold over its codes — no lookup tables, which is why
-    SQ serves faster than PQ at the same candidate count.  Up to
-    ``broadcast_threshold`` queries the scoring is one ``stack`` pass
-    with inlined literals; above it the ``(q_id, base, w)`` frame
-    broadcasts and cross-joins, exactly like :func:`pq_search`'s
-    large-batch path (inlined branches grow as queries × dim and blow
-    up codegen).  At SQ's modest compression the family targets
-    exact-ish recall, so no refine stage is composed here (measured
-    recall@5 ≈ 1.0 on the testdata embeddings — pytest-pinned ≥ 0.8).
+    SQ serves faster than PQ at the same candidate count.  The
+    ``(q_id, base, w)`` frame broadcasts and cross-joins, exactly like
+    :func:`pq_search` (:func:`_flat_search`).  At SQ's modest
+    compression the family targets exact-ish recall, so no refine
+    stage is composed here (measured recall@5 ≈ 1.0 on the testdata
+    embeddings — pytest-pinned ≥ 0.8).
 
     A corpus row whose ``codes`` length differs from the codec's dim
     (or carries a NULL element) RAISES — zip_with would otherwise
@@ -2793,56 +2470,8 @@ def sq_search(
 
     Query ids are caller-space (no self-exclusion unless
     ``exclude_self=True``), like every serving path here."""
-    dim = len(sq)
-    _validate_pq_queries(queries, dim)
-    guarded = _sq_guarded_codes_sql("codes", dim, "sq_search")
-    if len(queries) > broadcast_threshold:
-        from wikiextractor_spark.localframe import local_rows_df
-
-        qframe = local_rows_df(
-            codes.sparkSession,
-            [
-                (int(qid),) + _sq_query_params(sq, qv)
-                for qid, qv in queries
-            ],
-            "q_id long, base double, w array<double>",
-        )
-        scored = (
-            codes.selectExpr(
-                f"{id_col} as neighbor_id", f"{guarded} as codes"
-            )
-            .crossJoin(F.broadcast(qframe))
-            .selectExpr(
-                "q_id", "neighbor_id",
-                "round(base + aggregate(zip_with(codes, w, "
-                "(c, x) -> x * c), 0.0D, (acc, x) -> acc + x), 6) as score",
-            )
-        )
-    else:
-        branches = []
-        for qid, qv in queries:
-            base, w = _sq_query_params(sq, qv)
-            w_sql = "array(%s)" % ", ".join(f"{x}D" for x in w)
-            branches.append(
-                f"{qid}L, {base}D + aggregate(zip_with(_codes, {w_sql}, "
-                "(c, x) -> x * c), 0.0D, (acc, x) -> acc + x)"
-            )
-        scored = (
-            codes.selectExpr(
-                f"{id_col} as neighbor_id", f"{guarded} as _codes"
-            )
-            .selectExpr(
-                "neighbor_id",
-                f"stack({len(branches)}, {', '.join(branches)}) as (q_id, score)",
-            )
-            .withColumn("score", F.round("score", 6))
-        )
-    if exclude_self:
-        scored = scored.filter(F.col("neighbor_id") != F.col("q_id"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+    _validate_queries(queries, len(sq), "sq_search")
+    return _flat_search(
+        codes, _sq_codec(sq, "codes", "sq_search"), queries, topk, id_col,
+        exclude_self,
     )
