@@ -214,6 +214,24 @@ def test_url_prefix_discovery_multifile(spark, tmp_path):
     assert urls["Beta"] == "https://xx.wikipedia.org/wiki?curid=4"
 
 
+def test_url_prefix_discovery_skips_marker_files(spark, tmp_path):
+    """A job-output directory (``part-*`` plus a ``_SUCCESS`` marker
+    and hidden ``.crc`` files): the header probe must read the first
+    file the page scan reads, not the marker that sorts before it.
+    The space in the directory name pins the listing's URI decode."""
+    from wikiextractor_spark.sources.dump import discover_base_prefix
+
+    d = tmp_path / "dump out"
+    d.mkdir()
+    (d / "part-00000.xml").write_text(DUMP, encoding="utf8")
+    (d / "_SUCCESS").write_text("", encoding="utf8")
+    (d / ".part-00000.xml.crc").write_text("crc", encoding="utf8")
+    assert discover_base_prefix(spark, str(d)) == "https://xx.wikipedia.org/wiki"
+    docs = extract_documents(spark, str(d))
+    urls = {r["page_id"]: r["url"] for r in docs.select("page_id", "url").collect()}
+    assert urls[1] == "https://xx.wikipedia.org/wiki?curid=1"
+
+
 def test_vital_titles_join(spark, tmp_path):
     (tmp_path / "dump.xml").write_text(DUMP, encoding="utf8")
     (tmp_path / "vital.txt").write_text(

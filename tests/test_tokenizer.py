@@ -965,8 +965,10 @@ def test_train_bpe_tokenizer_dedups_relearned_pairs(
     import wikiextractor_spark.functions.tokenizer as tok
 
     monkeypatch.setattr(
-        tok, "learn_bpe_merges",
-        lambda *a, **k: [("a", "b", 9), ("c", "d", 5), ("a", "b", 2)],
+        tok, "_learn_merges",
+        lambda *a, **k: [
+            ("a", "b", "ab", 9), ("c", "d", "cd", 5), ("a", "b", "ab", 2),
+        ],
     )
     df = spark.createDataFrame(
         [(1, "abcd abcd")], "doc_id long, text string"

@@ -77,9 +77,49 @@ def test_local_and_distributed_trainers_agree(spark, _gate_guard):
                 "wordpiece_min_count_1",
                 lambda: wp.learn_wordpiece_merges(df, 5, min_count=1),
             ),
+            (
+                "bpe_specials",
+                lambda: tok.learn_bpe_merges(
+                    df, 6, min_count=1, special_tokens=["cd", "☃#"]
+                ),
+            ),
+            (
+                "wordpiece_specials",
+                lambda: wp.learn_wordpiece_merges(
+                    df, 6, min_count=2, special_tokens=["cd", "☃#"]
+                ),
+            ),
         ):
             local, dist = both(train)
             assert local == dist, (trial, name, local, dist)
+
+
+@pytest.mark.parametrize("family", ["bpe", "wordpiece"])
+def test_distributed_trainers_scan_the_corpus_once(
+    spark, _gate_guard, family
+):
+    """The venue gate reads the checkpointed word table, so a corpus
+    above the driver bound is counted once, not once for the gate and
+    again for the round loop's table."""
+    tok.TRAIN_DRIVER_MAX_WORDS = 0
+    sc = spark.sparkContext
+    texts = ["abab abab cdcd cd", "abcd ab cd", "dcba ab"] * 3
+    scans = sc.accumulator(0)
+
+    def row(t):
+        scans.add(1)
+        return (t,)
+
+    df = spark.createDataFrame(
+        sc.parallelize(texts, 2).map(row), "text string"
+    )
+    assert scans.value == 0
+    train = (
+        tok.learn_bpe_merges if family == "bpe"
+        else wp.learn_wordpiece_merges
+    )
+    assert train(df, 3, min_count=1)
+    assert scans.value == len(texts)
 
 
 def test_local_fold_matches_native_fold_semantics(spark, _gate_guard):

@@ -502,9 +502,9 @@ def test_unigram_seed_pieces_marker_words_exclusive(spark):
     (the grain is already fixed) — raise, never silently return
     plain-grain candidates (r15 second review)."""
     df = spark.createDataFrame([(0, "ab ba")], "doc_id long, text string")
-    from wikiextractor_spark.functions.unigram import _word_table
+    from wikiextractor_spark.functions.tokenizer import _word_counts
 
-    words = _word_table(df, "text", None, 0)
+    words, _bc = _word_counts(df, "text", None, 0)
     with pytest.raises(ValueError, match="mutually exclusive"):
         unigram_seed_pieces(df, space_marker="▁", _words=words)
 

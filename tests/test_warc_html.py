@@ -637,6 +637,20 @@ def test_cli_incompatible_flags_error(tmp_path):
         assert exc.value.code == 2, argv
 
 
+def test_cli_max_records_per_file_rejects_non_positive():
+    """Spark treats maxRecordsPerFile <= 0 as unlimited, so a value
+    below 1 would silently not split the output — a usage error
+    (exit 2) before any JVM boots, like --pack and --shards."""
+    import pytest
+
+    from wikiextractor_spark.__main__ import main
+
+    for value in ("0", "-3"):
+        with pytest.raises(SystemExit) as exc:
+            main(["--infn", "x", "--max-records-per-file", value])
+        assert exc.value.code == 2, value
+
+
 def test_cli_incompatible_flag_at_default_value_still_errors():
     """r11 ADVICE: a source-incompatible flag EXPLICITLY supplied at
     its default value must error too — 'supplied' is a sentinel test,

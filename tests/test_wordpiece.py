@@ -844,13 +844,6 @@ class TestTrainSpecialTokens:
                 corpus, 40, special_tokens=["<s>"],
                 basic_tokenize=True,
             )
-        with pytest.raises(ValueError, match="mutually exclusive"):
-            learn_wordpiece_merges(
-                corpus, 2, special_tokens=["<s>"],
-                _words=spark.createDataFrame(
-                    [(["a"], 1)], "syms array<string>, freq long"
-                ),
-            )
 
     def test_train_serve_round_trip_with_specials(self, spark):
         from wikiextractor_spark.functions.wordpiece import (

@@ -1084,6 +1084,13 @@ def main(argv: list[str] | None = None) -> None:
         args.out = "wiki_out"
     supplied = _resolve_scoped(args)
     _check_flag_compat(parser, args, supplied)
+    # Spark reads maxRecordsPerFile <= 0 as "no limit": a value that
+    # silently does nothing is a usage error
+    if (
+        args.max_records_per_file is not None
+        and args.max_records_per_file < 1
+    ):
+        parser.error("--max-records-per-file must be >= 1")
     if args.source == "docs":
         _validate_docs_args(parser, args, supplied)
         if args.train_tokenizer is not None and out_supplied:

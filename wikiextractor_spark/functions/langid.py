@@ -55,6 +55,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from wikiextractor_spark.functions.modelio import release_local_checkpoint
+
 # the md5 bucket construction and bucket-count guard are DSIR's —
 # imported, not copied, so the restatable-hash contract cannot drift
 from wikiextractor_spark.operators.dsir import _bucket_col
@@ -170,10 +172,6 @@ def fit_langid(
     NULL text raise (corrupt training data must not silently shape
     the model)."""
     _check_fit_params(n, buckets, alpha)
-    from wikiextractor_spark.functions.tokenizer import (
-        _release_local_checkpoint,
-    )
-
     # checkpoint the labeled projection ONCE: the NULL-row check, the
     # fit aggregations, and the prior aggregation are separate
     # actions, and without this each re-runs the normalization over
@@ -340,10 +338,10 @@ def fit_langid(
         # raises (it is built concurrently with the collects) — on
         # any error path release it like the other checkpoints
         if weights is not None:
-            _release_local_checkpoint(weights)
+            release_local_checkpoint(weights)
         raise
     finally:
-        _release_local_checkpoint(lab)
+        release_local_checkpoint(lab)
     return LangIdModel(
         langs=langs, weights=weights, priors_micro=priors,
         floors_micro=floors, n=n, buckets=buckets, salt=salt,

@@ -50,10 +50,13 @@ from __future__ import annotations
 
 import re
 import unicodedata
+from contextlib import contextmanager
 from functools import lru_cache, partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from wikiextractor_spark.functions.modelio import release_local_checkpoint
 
 VOCAB_SCHEMA = "token string, token_id double"
 
@@ -1307,22 +1310,16 @@ def bpe_decode_ids(
     return df.withColumn(out_col, _decode(F.col(ids_col)))
 
 
-def _merge_fold(a: str, b: str, fused: str | None = None):
+def _merge_fold(a: str, b: str, fused: str):
     """One training merge pass over a symbol array as a native
     Catalyst fold (``F.aggregate``): replace every adjacent (a, b)
-    left to right with overlap blocking — the accumulator carries a
-    ``pend``ing symbol so a lookahead match can either fuse
+    left to right with ``fused``, overlap blocked — the accumulator
+    carries a ``pend``ing symbol so a lookahead match can either fuse
     (``pend=a, x=b`` → emit the fused token) or flush.  Exactly the
     serving replay's per-rule pass (:func:`_bpe_replay_word`),
     expressed JVM-side; symbols are data, so the pair arrives as
-    ``F.lit`` (never spliced into an expr string).  ``fused``
-    overrides the emitted token (default ``a + b`` — WordPiece
-    training fuses with the continuation marker STRIPPED from b,
-    r13)."""
-    a_lit, b_lit = F.lit(a), F.lit(b)
-    fused_col = (
-        F.concat(a_lit, b_lit) if fused is None else F.lit(fused)
-    )
+    ``F.lit`` (never spliced into an expr string)."""
+    a_lit, b_lit, fused_col = F.lit(a), F.lit(b), F.lit(fused)
     init = F.struct(
         F.array().cast("array<string>").alias("acc"),
         F.lit(None).cast("string").alias("pend"),
@@ -1367,17 +1364,17 @@ _ADJ_PAIRS = (
 )
 
 
-#: r17 (guide §1.2): when the distinct-word table — the output of the
-#: ONE distributed counting shuffle — fits on the driver, the merge
-#: round loop runs locally with zero per-round Spark jobs, which is
-#: exactly how the published BPE/WordPiece trainers are built
-#: (distributed/streamed word counting, an in-memory merge loop).
-#: Above this row bound the distributed round loop runs unchanged.
-#: The local replay is value-identical by construction: same pair
-#: grain, same argmax order (count/score desc, pair key ascending —
-#: Python string comparison and UTF8String byte order agree on valid
-#: UTF-8), same IEEE divisions, same left-to-right overlap-blocked
-#: fold (pytest pins the equivalence on randomized corpora).
+#: r17 (guide §1.2): when the checkpointed distinct-word table fits on
+#: the driver, :func:`_learn_merges` runs the merge round loop locally
+#: with zero per-round Spark jobs, which is exactly how the published
+#: BPE/WordPiece trainers are built (distributed/streamed word
+#: counting, an in-memory merge loop).  Above this row bound the
+#: distributed round loop runs over the same checkpoint.  The local
+#: replay is value-identical by construction: same pair grain, same
+#: argmax order (count/score desc, pair key ascending — Python string
+#: comparison and UTF8String byte order agree on valid UTF-8), same
+#: IEEE divisions, same left-to-right overlap-blocked fold (pytest
+#: pins the equivalence on randomized corpora).
 TRAIN_DRIVER_MAX_WORDS = 1 << 17
 
 
@@ -1398,145 +1395,257 @@ def _merge_fold_local(
     return out
 
 
-def _learn_bpe_merges_local(
-    rows: list, n_merges: int, min_count: int,
+def _fuse_wp(a: str, b: str) -> str:
+    """The WordPiece fuse rule: the right side's continuation marker
+    is absorbed — merge('a','##b') → 'ab', merge('##b','##c') →
+    '##bc' (the left side keeps whatever marker it has)."""
+    return a + (b[2:] if b.startswith("##") else b)
+
+
+def _check_merge_args(n_merges: int, min_count: int, caller: str) -> None:
+    if n_merges < 0:
+        raise ValueError(f"{caller}: n_merges must be >= 0")
+    if min_count < 1:
+        raise ValueError(f"{caller}: min_count must be >= 1")
+
+
+def _learn_merges_local(
+    rows: list, n_merges: int, min_count: int, wordpiece: bool,
 ) -> list:
-    """The :func:`learn_bpe_merges` round loop over a COLLECTED word
-    table (``(syms, freq)`` pairs, already filtered to 2+-symbol
-    words) — value-identical replay of the distributed loop."""
+    """:func:`_learn_merges`' round loop over the COLLECTED word table
+    (``(syms, freq)`` pairs) — a value-identical replay of the
+    distributed loop."""
+    fuse = _fuse_wp if wordpiece else str.__add__
     merges: list = []
     for _ in range(n_merges):
-        cnt: dict = {}
+        pc: dict = {}
+        sc: dict = {}
         for syms, freq in rows:
+            if wordpiece:
+                for s in syms:
+                    sc[s] = sc.get(s, 0) + freq
             for i in range(len(syms) - 1):
                 k = (syms[i], syms[i + 1])
-                cnt[k] = cnt.get(k, 0) + freq
-        if not cnt:
+                pc[k] = pc.get(k, 0) + freq
+        best = None
+        for (a, b), c in pc.items():
+            if c < min_count:
+                continue
+            score = float(c) / float(sc[a]) / float(sc[b]) if wordpiece else c
+            key = (-score, a + " " + b)
+            if best is None or key < best[0]:
+                best = (key, a, b, c)
+        if best is None:
             break
-        (a, b), c = min(
-            cnt.items(),
-            key=lambda kv: (-kv[1], kv[0][0] + " " + kv[0][1]),
-        )
-        if c < min_count:
-            break
-        merges.append((a, b, int(c)))
+        _key, a, b, c = best
+        fused = fuse(a, b)
+        merges.append((a, b, fused, c))
         if len(merges) == n_merges:
             break
-        fused = a + b
         rows = [
             (folded, freq)
             for syms, freq in rows
             for folded in (_merge_fold_local(syms, a, b, fused),)
-            if len(folded) > 1
+            if wordpiece or len(folded) > 1
         ]
     return merges
 
 
-def _word_freq_table(
+def _learn_merges(
+    words: DataFrame, n_merges: int, min_count: int, wordpiece: bool,
+) -> list[tuple[str, str, str, int]]:
+    """The merge trainer both families share, over a CHECKPOINTED
+    ``(syms, freq)`` word table (:func:`_checkpointed_words`) →
+    ranked ``(left, right, fused, pair_count)``.  Each round picks the
+    adjacent pair with the highest score among pairs whose raw count
+    reaches ``min_count`` (ties broken by the pair key ascending) and
+    fuses all its occurrences left to right.
+
+    ``wordpiece`` selects the family: the likelihood score
+    ``cnt / count(a) / count(b)`` over symbol counts of the FULL
+    table (singleton words kept), and the ``##``-absorbing fuse
+    (:func:`_fuse_wp`).  Without it: BPE's raw-count score, plain
+    concatenation, and words down to one symbol dropped (they carry
+    no pair).  For BPE the ``min_count`` filter is exactly the old
+    stop rule — the raw-count argmax falls below ``min_count`` only
+    when no pair reaches it.
+
+    Venue: ONE limit-bounded read of the checkpoint — at or under
+    :data:`TRAIN_DRIVER_MAX_WORDS` rows the round loop runs on the
+    driver (:func:`_learn_merges_local`); above it each round is one
+    pair-count aggregation (plus the broadcast symbol counts for
+    WordPiece) and a single-row argmax collect, the merge pass a
+    narrow native fold (:func:`_merge_fold`) localCheckpointed per
+    round with the superseded round's blocks released."""
+    if not wordpiece:
+        words = words.where(F.size("syms") > 1)
+    head = words.limit(TRAIN_DRIVER_MAX_WORDS + 1).collect()
+    if len(head) <= TRAIN_DRIVER_MAX_WORDS:
+        return _learn_merges_local(
+            [(list(r["syms"]), int(r["freq"])) for r in head],
+            n_merges, min_count, wordpiece,
+        )
+    fuse = _fuse_wp if wordpiece else str.__add__
+    merges: list[tuple[str, str, str, int]] = []
+    cur = words
+    try:
+        for _ in range(n_merges):
+            # pairs come only from 2+-symbol words (the slice in
+            # _ADJ_PAIRS is empty on singletons)
+            pairs = (
+                cur.select(F.explode(F.expr(_ADJ_PAIRS)).alias("p"), "freq")
+                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+                .agg(F.sum("freq").alias("cnt"))
+                .where(F.col("cnt") >= min_count)
+            )
+            score = F.col("cnt")
+            if wordpiece:
+                syms = (
+                    cur.select(F.explode("syms").alias("s"), "freq")
+                    .groupBy("s")
+                    .agg(F.sum("freq").alias("c"))
+                )
+                pairs = pairs.join(
+                    F.broadcast(syms.toDF("a", "ca")), "a"
+                ).join(F.broadcast(syms.toDF("b", "cb")), "b")
+                # two divisions, never ca*cb: the BIGINT product
+                # overflows past ~3e9-frequency symbols (r13 ADVICE)
+                score = (
+                    F.col("cnt").cast("double")
+                    / F.col("ca").cast("double")
+                    / F.col("cb").cast("double")
+                )
+            best = (
+                pairs.orderBy(
+                    score.desc(), F.asc(F.concat_ws(" ", "a", "b"))
+                )
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            a, b = best[0]["a"], best[0]["b"]
+            fused = fuse(a, b)
+            merges.append((a, b, fused, int(best[0]["cnt"])))
+            if len(merges) == n_merges:
+                # the final round's fold feeds no further aggregation
+                break
+            folded = cur.select(
+                _merge_fold(a, b, fused)(F.col("syms")).alias("syms"),
+                "freq",
+            )
+            if not wordpiece:
+                folded = folded.where(F.size("syms") > 1)
+            prev, cur = cur, folded.localCheckpoint(eager=True)
+            # the caller owns the input table; every later round is
+            # ours, and the superseded one can go once its successor
+            # is materialized
+            if prev is not words:
+                release_local_checkpoint(prev)
+    finally:
+        if cur is not words:
+            release_local_checkpoint(cur)
+    return merges
+
+
+def _word_counts(
     df: DataFrame, text_col: str,
     sample_fraction: float | None, seed: int,
-) -> DataFrame:
-    """The distinct-word frequency table both training entry points
-    share — ONE wide map-side-combinable shuffle over the (optionally
-    sampled) corpus, yielding ``(syms array<string>, freq)`` rows.
-    Single definition so the trainer and the alphabet derivation can
-    never disagree on the pre-tokenization or sampling grain."""
+    *, pre_tokenizer: str | None = None, byte_level: bool = False,
+    special_pat: str | None = None,
+):
+    """The distinct-word frequency table every trainer reads —
+    ``((w string, freq long) frame, broadcast | None)`` from ONE
+    map-side-combinable shuffle over the (optionally sampled) corpus.
+    NULL text contributes nothing.  The frame is lazy; the families
+    project it (BPE symbols, WordPiece ``##`` marks, the unigram
+    marker) and :func:`_checkpointed_words` materializes it once.
+
+    At the plain whitespace grain the word split is the JVM's
+    (:data:`WS_SPLIT_PATTERN_JVM`).  A pre-tokenizer, the byte-level
+    grain or protected specials route through one Arrow-batched
+    pandas kernel instead: per text it splits out the protected
+    special texts (which contribute NOTHING to the statistics — the
+    published trainer convention, and the mirror of the serving
+    kernels' pre-split), runs the pre-tokenizer (``re.findall`` with
+    the given pattern — :data:`GPT2_PRETOKENIZER_PATTERN` for the
+    GPT-2 grain — or the whitespace split when ``None``) and, under
+    ``byte_level``, maps each pre-token through the SAME
+    :func:`gpt2_bytes_to_unicode` table the serving replay uses, so
+    trained merges and served replay share one symbol space.  The
+    kernel's broadcast handle rides back to the caller, who releases
+    it once the table is materialized (a module-global registry let
+    one caller unpersist another in-flight training's broadcast)."""
     src = df
     if sample_fraction is not None:
         src = src.sample(fraction=sample_fraction, seed=seed)
-    return (
-        src.select(
+    if pre_tokenizer is None and not byte_level and special_pat is None:
+        bc = None
+        words = src.select(
             F.explode(
                 F.split(F.col(text_col), WS_SPLIT_PATTERN_JVM)
             ).alias("w")
+        ).where(F.col("w") != "")
+    else:
+        byte_enc = gpt2_bytes_to_unicode() if byte_level else None
+        bc = df.sparkSession.sparkContext.broadcast(
+            (pre_tokenizer, byte_enc, special_pat)
         )
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("freq"))
-        .select(
-            F.expr("filter(split(w, ''), x -> x <> '')").alias("syms"),
-            "freq",
-        )
+
+        @F.pandas_udf("array<string>")
+        def _ptoks(s: pd.Series) -> pd.Series:
+            pat, enc, spat = bc.value
+            split = (
+                _WS_SPLIT.split if pat is None else re.compile(pat).findall
+            )
+            sre = re.compile(spat) if spat is not None else None
+
+            def one(t):
+                if t is None:
+                    return []
+                segs = [t] if sre is None else sre.split(t)
+                toks = [w for seg in segs for w in split(seg) if w]
+                if enc is not None:
+                    toks = [
+                        "".join(enc[b] for b in w.encode("utf-8"))
+                        for w in toks
+                    ]
+                return toks
+
+            return s.map(one)
+
+        words = src.select(F.explode(_ptoks(F.col(text_col))).alias("w"))
+    return words.groupBy("w").agg(F.count("*").alias("freq")), bc
+
+
+def _char_symbols(words: DataFrame) -> DataFrame:
+    """BPE's projection of the word table: ``(syms, freq)`` with each
+    word split into its characters."""
+    return words.select(
+        F.expr("filter(split(w, ''), x -> x <> '')").alias("syms"), "freq"
     )
 
 
-def _pretok_word_freq_table(
-    df: DataFrame, text_col: str,
-    sample_fraction: float | None, seed: int,
-    pre_tokenizer: str | None, byte_level: bool,
-    special_pat: str | None = None,
-    symbols: bool = True,
+@contextmanager
+def _checkpointed_words(
+    project, df: DataFrame, text_col: str,
+    sample_fraction: float | None, seed: int, **grain,
 ):
-    """The distinct PRE-TOKEN frequency table for byte-level /
-    pre-tokenized BPE training (r15): per text one Arrow-batched
-    pandas UDF runs the pre-tokenizer (``re.findall`` with the given
-    pattern — pass :data:`GPT2_PRETOKENIZER_PATTERN` for the GPT-2
-    grain — or the whitespace split when ``None``) and, under
-    ``byte_level``, maps each pre-token through the SAME
-    :func:`gpt2_bytes_to_unicode` table the serving replay uses, so
-    trained merges and served replay provably share one symbol space.
-    Returns ``(frame, broadcast)`` — the :func:`_word_freq_table`
-    shape ``(syms array<string>, freq)`` plus the kernel's broadcast
-    handle, which the CALLER must ``unpersist()`` once its eager
-    checkpoint has materialized the table (the frame is lazy, so the
-    function cannot know when consumption ends).  NULL text
-    contributes nothing.  ``symbols=False`` (r15) returns the
-    word-grain ``(w, freq)`` shape instead — the unigram trainer's
-    word table, which wants the word string, not its symbol split.
-
-    Scale shape: identical to :func:`_word_freq_table` — ONE
-    map-side-combinable shuffle over the (optionally sampled) corpus;
-    the Python kernel is a linear regex scan per text (the serving
-    kernels' cost class), and everything after the explode is native.
-    """
-    src = df
-    if sample_fraction is not None:
-        src = src.sample(fraction=sample_fraction, seed=seed)
-    byte_enc = gpt2_bytes_to_unicode() if byte_level else None
-    # the handle rides back to the caller, who releases it once its
-    # eager checkpoint has materialized the table (r15 second review:
-    # a module-global registry let one caller unpersist another
-    # in-flight training's broadcast) — the _em_round discipline,
-    # per-caller
-    bc = df.sparkSession.sparkContext.broadcast(
-        (pre_tokenizer, byte_enc, special_pat)
-    )
-
-    @F.pandas_udf("array<string>")
-    def _ptoks(s: pd.Series) -> pd.Series:
-        pat, enc, spat = bc.value
-        split = _WS_SPLIT.split if pat is None else re.compile(pat).findall
-        sre = re.compile(spat) if spat is not None else None
-
-        def one(t):
-            if t is None:
-                return []
-            # protected specials (r15): their literal text splits out
-            # BEFORE pre-tokenization and contributes NOTHING to the
-            # pair statistics — the published trainer convention, and
-            # the exact mirror of the serving kernels' pre-split
-            segs = [t] if sre is None else sre.split(t)
-            toks = [w for seg in segs for w in split(seg) if w]
-            if enc is not None:
-                toks = [
-                    "".join(enc[b] for b in w.encode("utf-8"))
-                    for w in toks
-                ]
-            return toks
-
-        return s.map(one)
-
-    frame = (
-        src.select(F.explode(_ptoks(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("freq"))
-    )
-    if symbols:
-        frame = frame.select(
-            F.expr("filter(split(w, ''), x -> x <> '')").alias("syms"),
-            "freq",
-        )
-    return frame, bc
+    """Build the :func:`_word_counts` table (``grain`` is its keyword
+    arguments), apply the family's ``project``ion, checkpoint it
+    eagerly — the ONE corpus scan of a training call — release the
+    kernel broadcast (even when the checkpoint job fails), and yield
+    the checkpoint, whose blocks are released on exit."""
+    frame, bc = _word_counts(df, text_col, sample_fraction, seed, **grain)
+    try:
+        words = project(frame).localCheckpoint(eager=True)
+    finally:
+        if bc is not None:
+            bc.unpersist()
+    try:
+        yield words
+    finally:
+        release_local_checkpoint(words)
 
 
 def _check_train_specials(
@@ -1584,22 +1693,10 @@ def _check_train_grain(
         )
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Shared checkpoint-release route — see
-    :func:`wikiextractor_spark.functions.modelio.
-    release_local_checkpoint` (made public in r12; this alias keeps
-    the trainer's internal call sites stable)."""
-    from wikiextractor_spark.functions.modelio import (
-        release_local_checkpoint,
-    )
-
-    release_local_checkpoint(df)
-
-
 def learn_bpe_merges(
     df: DataFrame, n_merges: int, text_col: str = "text",
     min_count: int = 2, sample_fraction: float | None = None,
-    seed: int = 0, _words: DataFrame | None = None,
+    seed: int = 0,
     *, byte_level: bool = False, pre_tokenizer: str | None = None,
     special_tokens: list[str] | None = None,
 ) -> list[tuple[str, str, int]]:
@@ -1620,124 +1717,41 @@ def learn_bpe_merges(
     ``n_merges`` while any pair exists).
 
     Scale shape: ONE wide shuffle builds the distinct-word frequency
-    table (map-side combinable; ``sample_fraction`` bounds the scan
-    when an approximate vocabulary is acceptable — the standard trade
-    for web-scale training); every iteration then runs over that
-    monotonically-SHRINKING table (fully-merged words drop out): one
-    pair-count aggregation plus a single-row argmax collect, with the
-    merge pass itself a narrow native fold (:func:`_merge_fold`, zero
-    Python).  ``localCheckpoint`` truncates the growing fold lineage
-    each round, so iteration k replans O(1) work, not O(k).  Large
-    vocabularies mean many sequential small jobs — inherent to BPE's
-    sequential-dependence, same as any distributed trainer.
+    table, checkpointed once (map-side combinable;
+    ``sample_fraction`` bounds the scan when an approximate
+    vocabulary is acceptable — the standard trade for web-scale
+    training); the round loop (:func:`_learn_merges`) runs on the
+    driver when the table fits, else as per-round jobs over the
+    monotonically-SHRINKING table (fully-merged words drop out).
+    Large vocabularies mean many sequential rounds — inherent to
+    BPE's sequential dependence, same as any distributed trainer.
 
     ``byte_level`` / ``pre_tokenizer`` (r15, closing the r14 VERDICT's
     train-the-grain-you-serve gap): train in the SAME symbol space the
     published replay mode serves — the word table is built by running
     the serving pre-tokenizer (pass :data:`GPT2_PRETOKENIZER_PATTERN`
     for the GPT-2 grain) and the :func:`gpt2_bytes_to_unicode` encode
-    over the corpus (:func:`_pretok_word_freq_table`), so the learned
-    merges feed :func:`bpe_token_count_exact` / :func:`bpe_token_ids`
-    with the same ``byte_level=True, pre_tokenizer=...`` arguments and
+    over the corpus (:func:`_word_counts`), so the learned merges
+    feed :func:`bpe_token_count_exact` / :func:`bpe_token_ids` with
+    the same ``byte_level=True, pre_tokenizer=...`` arguments and
     replay EXACTLY as trained.  A pre-tokenizer without byte-level
     raises (pre-tokens carry whitespace; only the byte encode maps
     them into the artifact contract's whitespace-free symbol space).
 
-    ``_words`` (private): a pre-built :func:`_word_freq_table` frame;
-    when supplied, ``text_col``/``sample_fraction``/``seed``/
-    ``byte_level``/``pre_tokenizer`` are ignored —
-    :func:`train_bpe_tokenizer` passes its checkpointed table so
-    corpus scanning happens once."""
-    if n_merges < 0:
-        raise ValueError("learn_bpe_merges: n_merges must be >= 0")
-    if min_count < 1:
-        raise ValueError("learn_bpe_merges: min_count must be >= 1")
+    ``special_tokens``: their literal text is protected from training
+    (see :func:`train_bpe_tokenizer`)."""
+    _check_merge_args(n_merges, min_count, "learn_bpe_merges")
     _check_train_grain(byte_level, pre_tokenizer, "learn_bpe_merges")
     _sp_texts, sp_pat = _check_train_specials(
         special_tokens, "learn_bpe_merges"
     )
-    pretok_bc = None
-    if _words is not None:
-        base = _words
-    elif byte_level or sp_pat is not None:
-        # the Python kernel path also carries plain-grain training
-        # when specials need protecting (the JVM split cannot drop
-        # literal special text)
-        base, pretok_bc = _pretok_word_freq_table(
-            df, text_col, sample_fraction, seed, pre_tokenizer,
-            byte_level, special_pat=sp_pat,
-        )
-    else:
-        base = _word_freq_table(df, text_col, sample_fraction, seed)
-    # r17 (guide §1.2): ONE limit-bounded collect of the counted word
-    # table decides the loop venue — at or under
-    # TRAIN_DRIVER_MAX_WORDS rows the whole table is in hand and the
-    # round loop runs locally (zero per-round jobs, no per-round
-    # checkpoints, no per-round Janino); above it the distributed
-    # loop below runs unchanged (its first checkpoint re-runs the
-    # counting shuffle — one extra corpus pass against the thousands
-    # of per-round jobs a production vocabulary runs).
-    try:
-        head = (
-            base.where(F.size("syms") > 1)
-            .limit(TRAIN_DRIVER_MAX_WORDS + 1)
-            .collect()
-        )
-    finally:
-        if pretok_bc is not None:
-            # the collect above was this broadcast's first consumer —
-            # release in finally so a failed job cannot strand the
-            # broadcast (r15 third review).  The big-table checkpoint
-            # below may re-run the kernel: unpersist() (non-blocking,
-            # executor copies only) leaves the broadcast refetchable
-            # from the driver, so that re-run stays correct.
-            pretok_bc.unpersist()
-    if len(head) <= TRAIN_DRIVER_MAX_WORDS:
-        return _learn_bpe_merges_local(
-            [(list(r["syms"]), int(r["freq"])) for r in head],
-            n_merges, min_count,
-        )
-    words = base.where(F.size("syms") > 1).localCheckpoint(eager=True)
-    merges: list[tuple[str, str, int]] = []
-    try:
-        for _ in range(n_merges):
-            best = (
-                words.select(F.explode(F.expr(_ADJ_PAIRS)).alias("p"), "freq")
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(
-                    F.desc("cnt"), F.asc(F.concat_ws(" ", "a", "b"))
-                )
-                .limit(1)
-                .collect()
-            )
-            if not best or best[0]["cnt"] < min_count:
-                break
-            a, b = best[0]["a"], best[0]["b"]
-            merges.append((a, b, int(best[0]["cnt"])))
-            if len(merges) == n_merges:
-                # r16 (guide §1.2, don't compute what you throw
-                # away): the final round's fold feeds no further
-                # aggregation — its checkpoint job was pure waste
-                break
-            prev = words
-            words = (
-                words.select(
-                    _merge_fold(a, b)(F.col("syms")).alias("syms"), "freq"
-                )
-                .where(F.size("syms") > 1)
-                .localCheckpoint(eager=True)
-            )
-            # the new round's checkpoint is eager-materialized above,
-            # so the superseded round's blocks can go now — without
-            # this, a production-vocab run accumulates O(n_merges)
-            # copies of the word table in the block manager
-            _release_local_checkpoint(prev)
-    finally:
-        # every round's checkpoint is trainer-internal (the caller
-        # only sees the merges list) — release the last one too
-        _release_local_checkpoint(words)
-    return merges
+    with _checkpointed_words(
+        _char_symbols, df, text_col, sample_fraction, seed,
+        pre_tokenizer=pre_tokenizer, byte_level=byte_level,
+        special_pat=sp_pat,
+    ) as words:
+        merges = _learn_merges(words, n_merges, min_count, False)
+    return [(a, b, c) for a, b, _fused, c in merges]
 
 
 def train_bpe_tokenizer(
@@ -1819,26 +1833,16 @@ def train_bpe_tokenizer(
             "train_bpe_tokenizer: pass exactly one of n_merges or "
             "vocab_size"
         )
+    _check_merge_args(n_merges or 0, min_count, "train_bpe_tokenizer")
     _check_train_grain(byte_level, pre_tokenizer, "train_bpe_tokenizer")
     sp_texts, sp_pat = _check_train_specials(
         special_tokens, "train_bpe_tokenizer"
     )
-    if byte_level or sp_pat is not None:
-        frame, pretok_bc = _pretok_word_freq_table(
-            df, text_col, sample_fraction, seed, pre_tokenizer,
-            byte_level, special_pat=sp_pat,
-        )
-        try:
-            words = frame.localCheckpoint(eager=True)
-        finally:
-            # checkpoint = the only consumer; release even when the
-            # checkpoint job fails (r15 third review)
-            pretok_bc.unpersist()
-    else:
-        words = _word_freq_table(
-            df, text_col, sample_fraction, seed
-        ).localCheckpoint(eager=True)
-    try:
+    with _checkpointed_words(
+        _char_symbols, df, text_col, sample_fraction, seed,
+        pre_tokenizer=pre_tokenizer, byte_level=byte_level,
+        special_pat=sp_pat,
+    ) as words:
         if byte_level:
             # full byte coverage, never the observed corpus chars —
             # but an empty corpus must still raise (a silent 256-row
@@ -1879,17 +1883,10 @@ def train_bpe_tokenizer(
                     f"{vocab_size} — truncating would silently drop "
                     "entries; raise vocab_size"
                 )
-        learned = learn_bpe_merges(
-            df, n_merges, text_col=text_col, min_count=min_count,
-            _words=words,
-        )
-    finally:
-        # release the shared word table's checkpoint blocks like the
-        # trainer releases its per-round ones
-        _release_local_checkpoint(words)
+        learned = _learn_merges(words, n_merges, min_count, False)
     pairs: list[tuple[str, str]] = []
     seen_pairs: set[tuple[str, str]] = set()
-    for a, b, _cnt in learned:
+    for a, b, _fused, _cnt in learned:
         if (a, b) not in seen_pairs:
             seen_pairs.add((a, b))
             pairs.append((a, b))

@@ -58,7 +58,10 @@ from pyspark.sql import DataFrame, functions as F
 from wikiextractor_spark.functions.tokenizer import (
     _WS_SPLIT,
     _bad_tokens,
+    _check_train_specials,
+    _checkpointed_words,
     _memoized_word_counter,
+    _word_counts,
 )
 
 UNIGRAM_SCHEMA = "token string, logprob double"
@@ -896,51 +899,17 @@ MAX_SEED_SIZE = 200_000
 MAX_EM_WORD_LEN = 512
 
 
-def _word_table(df, text_col, sample_fraction, seed, prefix="",
-                special_pat=None):
-    """``((w, freq), broadcast|None)`` distinct-word table at the
-    engine's whitespace grain — the :func:`tokenizer.
-    _word_freq_table` shuffle WITHOUT the symbol projection (the EM
-    lattice wants the word string).  ``prefix`` (r15): the
-    SentencePiece space marker prepended to every word AFTER the
-    aggregation (one native concat over the distinct-word rows — the
-    ``add_dummy_prefix`` training shape, matching exactly what the
-    serving kernels' per-word ``prefix`` does before the DP).
-    ``special_pat`` (r15): the protected-specials kernel path
-    (:func:`tokenizer._pretok_word_freq_table` at the word grain) —
-    literal special texts split out before the word split; the
-    CALLER must ``unpersist()`` the returned broadcast once its
-    eager checkpoint has materialized the table."""
-    from wikiextractor_spark.functions.tokenizer import (
-        WS_SPLIT_PATTERN_JVM,
-        _pretok_word_freq_table,
+def _with_marker(words: DataFrame, marker: str) -> DataFrame:
+    """The unigram projection of the :func:`tokenizer._word_counts`
+    table: the SentencePiece space marker prepended to every distinct
+    word (one native concat — the ``add_dummy_prefix`` training
+    shape, matching exactly what the serving kernels' per-word
+    ``prefix`` does before the DP); the table as-is without one."""
+    if not marker:
+        return words
+    return words.select(
+        F.concat(F.lit(marker), F.col("w")).alias("w"), "freq"
     )
-
-    if special_pat is not None:
-        out, bc = _pretok_word_freq_table(
-            df, text_col, sample_fraction, seed, None, False,
-            special_pat=special_pat, symbols=False,
-        )
-    else:
-        src = df
-        if sample_fraction is not None:
-            src = src.sample(fraction=sample_fraction, seed=seed)
-        out = (
-            src.select(
-                F.explode(
-                    F.split(F.col(text_col), WS_SPLIT_PATTERN_JVM)
-                ).alias("w")
-            )
-            .where(F.col("w") != "")
-            .groupBy("w")
-            .agg(F.count("*").alias("freq"))
-        )
-        bc = None
-    if prefix:
-        out = out.select(
-            F.concat(F.lit(prefix), F.col("w")).alias("w"), "freq"
-        )
-    return out, bc
 
 
 def unigram_seed_pieces(
@@ -984,9 +953,9 @@ def unigram_seed_pieces(
             "yourself (learn_unigram_lm does)"
         )
     if _words is None:
-        words, _bc = _word_table(
-            df, text_col, sample_fraction, seed, prefix=marker
-        )
+        # plain whitespace grain: no kernel, so no broadcast to release
+        words, _bc = _word_counts(df, text_col, sample_fraction, seed)
+        words = _with_marker(words, marker)
     else:
         words = _words
     subs = F.expr(
@@ -1232,11 +1201,6 @@ def learn_unigram_lm(
     ``log(seed/vocab)/log(1/shrink)`` — fixed job count.
     ``sample_fraction`` bounds the corpus scan at web scale (the
     learn_bpe_merges trade)."""
-    from wikiextractor_spark.functions.tokenizer import (
-        _check_train_specials,
-        _release_local_checkpoint,
-    )
-
     marker = _check_marker(space_marker, "learn_unigram_lm")
     _sp_texts, sp_pat = _check_train_specials(
         special_tokens, "learn_unigram_lm"
@@ -1268,19 +1232,10 @@ def learn_unigram_lm(
             f"learn_unigram_lm: n_em_iters must be >= 1, got "
             f"{n_em_iters}"
         )
-    frame, bc = _word_table(
-        df, text_col, sample_fraction, seed, prefix=marker,
-        special_pat=sp_pat,
-    )
-    try:
-        words = frame.localCheckpoint(eager=True)
-    finally:
-        # the protected-kernel broadcast's only consumer is the
-        # checkpoint job — release even when it fails (the
-        # train_bpe_tokenizer discipline)
-        if bc is not None:
-            bc.unpersist()
-    try:
+    with _checkpointed_words(
+        partial(_with_marker, marker=marker), df, text_col,
+        sample_fraction, seed, special_pat=sp_pat,
+    ) as words:
         seed_df = unigram_seed_pieces(
             df, text_col, max_piece_len=max_piece_len, _words=words
         )
@@ -1372,9 +1327,7 @@ def learn_unigram_lm(
             survivors |= {p for p in logp if len(p) == 1}
             total = sum(counts[p] for p in survivors)
             logp = {p: math.log(counts[p] / total) for p in survivors}
-        if not logp:
-            raise ValueError("learn_unigram_lm: training emptied the vocab")
-        unk = min(logp.values()) - float(unk_penalty)
-        return unigram_from_tokens(df.sparkSession, logp, unk)
-    finally:
-        _release_local_checkpoint(words)
+    if not logp:
+        raise ValueError("learn_unigram_lm: training emptied the vocab")
+    unk = min(logp.values()) - float(unk_penalty)
+    return unigram_from_tokens(df.sparkSession, logp, unk)

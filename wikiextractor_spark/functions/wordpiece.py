@@ -61,12 +61,18 @@ from pyspark.sql import DataFrame, functions as F
 from wikiextractor_spark.functions.tokenizer import (
     _WS_SPLIT,
     _bad_tokens,
+    _char_symbols,
+    _check_merge_args,
+    _check_train_specials,
+    _checkpointed_words,
     _compile_specials,
+    _fuse_wp,  # noqa: F401 (re-exported for callers and tests)
     # the published BasicTokenizer ``_is_punctuation`` is the SAME
     # class as the HF Punctuation pre-tokenizer's — one definition,
     # two published names (r16 review: two identical classifiers
     # would drift under a future Unicode fix)
     _is_hf_punct as _is_basic_punct,
+    _learn_merges,
     _memoized_word_counter,
     _vocab_id_maps,
 )
@@ -637,133 +643,51 @@ def basic_tokenize_one(
 # In-engine WordPiece vocabulary training
 # --------------------------------------------------------------------------
 
-def _wp_word_table(df, text_col, sample_fraction, seed,
-                   basic_tokenize=False, special_pat=None):
-    """``((syms array<string>, freq), broadcast|None)`` at the
-    WordPiece grain — the shared distinct-word shuffle of
-    :func:`tokenizer._word_freq_table` with the continuation-marker
-    transform applied on top (one home for the
-    pre-tokenization/sampling grain).  ``basic_tokenize`` (r15):
-    the text runs through :func:`basic_tokenize_text` FIRST — one
-    extra native projection (plus the accent-strip Arrow kernel), so
-    training sees exactly the grain ``--basic-tokenize`` serving
-    normalizes to.  ``special_pat`` (r15): the protected-specials
-    kernel path (:func:`tokenizer._pretok_word_freq_table` at the
-    whitespace grain) — the literal special texts split out before
-    the word split and contribute NOTHING to the statistics; the
-    CALLER must ``unpersist()`` the returned broadcast once its
-    eager checkpoint has materialized the table."""
-    from wikiextractor_spark.functions.tokenizer import (
-        _pretok_word_freq_table,
-        _word_freq_table,
-    )
-
-    if basic_tokenize:
-        df = df.select(basic_tokenize_text(text_col).alias(text_col))
-    if special_pat is not None:
-        base, bc = _pretok_word_freq_table(
-            df, text_col, sample_fraction, seed, None, False,
-            special_pat=special_pat,
-        )
-    else:
-        base, bc = (
-            _word_freq_table(df, text_col, sample_fraction, seed),
-            None,
-        )
-    return base.select(
+def _wp_symbols(words: DataFrame) -> DataFrame:
+    """WordPiece's projection of the word table: the word's characters
+    with every piece after the first ``##``-marked."""
+    return _char_symbols(words).select(
         F.expr(
             "transform(syms, (x, i) -> "
             "CASE WHEN i = 0 THEN x ELSE '##' || x END)"
         ).alias("syms"),
         "freq",
-    ), bc
-
-
-def _fuse_wp(a: str, b: str) -> str:
-    """The WordPiece fuse rule: the right side's continuation marker
-    is absorbed — merge('a','##b') → 'ab', merge('##b','##c') →
-    '##bc' (the left side keeps whatever marker it has)."""
-    return a + (b[2:] if b.startswith("##") else b)
-
-
-def _learn_wp_merges_local(
-    rows: list, n_merges: int, min_count: int,
-) -> list:
-    """The :func:`learn_wordpiece_merges` round loop over a COLLECTED
-    word table (``(syms, freq)`` pairs, singletons INCLUDED — the
-    published symbol-denominator convention) — value-identical replay
-    of the distributed loop: same pair/symbol grain, the same two
-    IEEE double divisions ``cnt / count(a) / count(b)``, score-desc /
-    pair-key-asc argmax, the ``##``-absorbing fuse, no size filter on
-    the folded table.  Zero Spark jobs (r17, guide §1.2 — see
-    :data:`tokenizer.TRAIN_DRIVER_MAX_WORDS`)."""
-    from wikiextractor_spark.functions.tokenizer import (
-        _merge_fold_local,
     )
 
-    merges: list = []
-    for _ in range(n_merges):
-        pc: dict = {}
-        sc: dict = {}
-        for syms, freq in rows:
-            for s in syms:
-                sc[s] = sc.get(s, 0) + freq
-            for i in range(len(syms) - 1):
-                k = (syms[i], syms[i + 1])
-                pc[k] = pc.get(k, 0) + freq
-        best = None
-        for (a, b), c in pc.items():
-            if c < min_count:
-                continue
-            score = float(c) / float(sc[a]) / float(sc[b])
-            key = (-score, a + " " + b)
-            if best is None or key < best[0]:
-                best = (key, (a, b, c))
-        if best is None:
-            break
-        a, b, c = best[1]
-        fused = _fuse_wp(a, b)
-        merges.append((a, b, fused, int(c)))
-        if len(merges) == n_merges:
-            break
-        rows = [
-            (_merge_fold_local(syms, a, b, fused), freq)
-            for syms, freq in rows
-        ]
-    return merges
 
-
-def _check_wp_specials_scope(
-    sp_pat, basic_tokenize: bool, _words, caller: str,
-) -> None:
-    """Shared WordPiece-trainer specials scope rules: a pre-built
-    word table already fixed the grain (silently unprotected
-    training would follow — the seed-grain-contradiction rule), and
-    ``basic_tokenize`` normalization would MANGLE the literal
-    special texts (its punctuation split runs before the protection
-    could see them) — both raise rather than train a subtly wrong
-    artifact."""
-    if sp_pat is None:
-        return
-    if _words is not None:
-        raise ValueError(
-            f"{caller}: special_tokens and _words are mutually "
-            "exclusive — the pre-built word table already fixed the "
-            "grain, so the protection could not apply"
-        )
-    if basic_tokenize:
+def _wp_words(
+    df, text_col, sample_fraction, seed, basic_tokenize, special_tokens,
+    caller,
+):
+    """``(special texts, checkpointed word table)`` at the WordPiece
+    grain — :func:`tokenizer._checkpointed_words` with the ``##``
+    projection.  ``basic_tokenize`` (r15) runs the text through
+    :func:`basic_tokenize_text` FIRST (one extra native projection
+    plus the accent-strip Arrow kernel), so training sees exactly the
+    grain ``--basic-tokenize`` serving normalizes to.  Protected
+    specials with ``basic_tokenize`` raise: the BasicTokenizer
+    punctuation split would MANGLE the literal special texts before
+    the protection could see them."""
+    sp_texts, sp_pat = _check_train_specials(special_tokens, caller)
+    if sp_pat is not None and basic_tokenize:
         raise ValueError(
             f"{caller}: special_tokens with basic_tokenize is not "
             "supported — the BasicTokenizer punctuation split would "
             "mangle the literal special texts before the protection "
             "runs; strip the specials upstream or train raw-grain"
         )
+    if basic_tokenize:
+        df = df.select(basic_tokenize_text(text_col).alias(text_col))
+    return sp_texts, _checkpointed_words(
+        _wp_symbols, df, text_col, sample_fraction, seed,
+        special_pat=sp_pat,
+    )
 
 
 def learn_wordpiece_merges(
     df: DataFrame, n_merges: int, text_col: str = "text",
     min_count: int = 2, sample_fraction: float | None = None,
-    seed: int = 0, _words: DataFrame | None = None,
+    seed: int = 0,
     *, basic_tokenize: bool = False,
     special_tokens: list[str] | None = None,
 ) -> list[tuple[str, str, str, int]]:
@@ -806,161 +730,37 @@ def learn_wordpiece_merges(
     ``wordpiece_token_ids`` sees under the published uncased
     pipeline — so a trained artifact serves faithfully with
     ``--basic-tokenize`` instead of UNKing every cased/punctuated
-    word.  Ignored when ``_words`` is supplied (the grain is already
-    fixed; :func:`learn_wordpiece_vocab` passes the right table).
+    word.
 
     ``special_tokens`` (r15, the BPE trainer's protection on this
     family): the literal texts are PROTECTED from training — split
     out before the word split, contributing nothing to the pair or
     symbol statistics (a corpus containing engine output re-ingested
     as text must not train marker fragments).  Mutually exclusive
-    with ``_words`` (the grain is already fixed — the
-    seed-grain-contradiction rule) and with ``basic_tokenize`` (the
-    punctuation split would mangle the literal texts before the
-    protection could see them — pre-normalize specials out upstream
-    if both are needed).  Id RESERVATION is the vocabulary builder's
-    job (:func:`learn_wordpiece_vocab` places them FIRST, the
-    published BERT-trainer layout).
+    with ``basic_tokenize`` (the punctuation split would mangle the
+    literal texts before the protection could see them —
+    pre-normalize specials out upstream if both are needed).  Id
+    RESERVATION is the vocabulary builder's job
+    (:func:`learn_wordpiece_vocab` places them FIRST, the published
+    BERT-trainer layout).
 
-    Scale shape: the :func:`learn_bpe_merges` discipline — one
-    distinct-word shuffle up front, each round two map-side-combined
-    aggregations over the full distinct-word table (pair counts +
-    symbol counts, joined driver-broadcast small; retired
-    single-symbol words contribute no pairs and their merge pass is
-    a no-op fold, so keeping them costs one narrow native scan per
-    round — the price of the published denominator) plus one
-    single-row argmax collect; the merge pass is the shared native
-    fold; per-round localCheckpoint with the superseded round's
-    blocks released."""
-    from wikiextractor_spark.functions.tokenizer import (
-        _ADJ_PAIRS,
-        _check_train_specials,
-        _merge_fold,
-        _release_local_checkpoint,
+    Scale shape: the :func:`~wikiextractor_spark.functions.tokenizer.
+    learn_bpe_merges` discipline — one checkpointed distinct-word
+    shuffle up front and the shared round loop
+    (:func:`tokenizer._learn_merges`); distributed, each round runs
+    two map-side-combined aggregations over the full distinct-word
+    table (pair counts + symbol counts, joined driver-broadcast
+    small; retired single-symbol words contribute no pairs and their
+    merge pass is a no-op fold, so keeping them costs one narrow
+    native scan per round — the price of the published
+    denominator)."""
+    _check_merge_args(n_merges, min_count, "learn_wordpiece_merges")
+    _sp_texts, table = _wp_words(
+        df, text_col, sample_fraction, seed, basic_tokenize,
+        special_tokens, "learn_wordpiece_merges",
     )
-
-    if n_merges < 0:
-        raise ValueError("learn_wordpiece_merges: n_merges must be >= 0")
-    if min_count < 1:
-        raise ValueError("learn_wordpiece_merges: min_count must be >= 1")
-    _texts, sp_pat = _check_train_specials(
-        special_tokens, "learn_wordpiece_merges"
-    )
-    _check_wp_specials_scope(
-        sp_pat, basic_tokenize, _words, "learn_wordpiece_merges"
-    )
-    # checkpoint ONLY a table we build ourselves: a caller-supplied
-    # _words is already checkpointed (learn_wordpiece_vocab), and
-    # re-checkpointing it would materialize a byte-identical second
-    # copy of the full word table (r14 third review); ownership
-    # tracking keeps the releases to frames THIS function created
-    from wikiextractor_spark.functions.tokenizer import (
-        TRAIN_DRIVER_MAX_WORDS,
-    )
-
-    if _words is None:
-        frame, bc = _wp_word_table(
-            df, text_col, sample_fraction, seed,
-            basic_tokenize=basic_tokenize, special_pat=sp_pat,
-        )
-        # r17 (guide §1.2): one limit-bounded collect decides the
-        # loop venue — the learn_bpe_merges gate, at the WordPiece
-        # grain (NO 2+-symbol filter: singleton words feed the
-        # published symbol denominators)
-        try:
-            head = frame.limit(TRAIN_DRIVER_MAX_WORDS + 1).collect()
-        finally:
-            # first consumer of the protected-kernel broadcast —
-            # release even on failure (the train_bpe_tokenizer
-            # discipline); a big-table re-run refetches it from the
-            # driver (unpersist is non-blocking, executor-side only)
-            if bc is not None:
-                bc.unpersist()
-        if len(head) <= TRAIN_DRIVER_MAX_WORDS:
-            return _learn_wp_merges_local(
-                [(list(r["syms"]), int(r["freq"])) for r in head],
-                n_merges, min_count,
-            )
-        words = frame.localCheckpoint(eager=True)
-        owns_current = True
-    else:
-        words = _words
-        head = words.limit(TRAIN_DRIVER_MAX_WORDS + 1).collect()
-        if len(head) <= TRAIN_DRIVER_MAX_WORDS:
-            return _learn_wp_merges_local(
-                [(list(r["syms"]), int(r["freq"])) for r in head],
-                n_merges, min_count,
-            )
-        owns_current = False
-    merges: list[tuple[str, str, str, int]] = []
-    try:
-        for _ in range(n_merges):
-            # pairs come only from 2+-symbol words by construction
-            # (the slice in _ADJ_PAIRS is empty on singletons); the
-            # symbol counts below deliberately see EVERY word
-            pairs = (
-                words.select(
-                    F.explode(F.expr(_ADJ_PAIRS)).alias("p"), "freq"
-                )
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("freq").alias("cnt"))
-            )
-            syms = (
-                words.select(F.explode("syms").alias("s"), "freq")
-                .groupBy("s")
-                .agg(F.sum("freq").alias("c"))
-            )
-            best = (
-                pairs.where(F.col("cnt") >= min_count)
-                .join(
-                    F.broadcast(syms.withColumnRenamed("s", "a")
-                                .withColumnRenamed("c", "ca")), "a"
-                )
-                .join(
-                    F.broadcast(syms.withColumnRenamed("s", "b")
-                                .withColumnRenamed("c", "cb")), "b"
-                )
-                .withColumn(
-                    # two divisions, never ca*cb: the BIGINT product
-                    # overflows past ~3e9-frequency symbols (r13
-                    # ADVICE); cnt/ca/cb stays in doubles throughout
-                    "score",
-                    F.col("cnt").cast("double")
-                    / F.col("ca").cast("double")
-                    / F.col("cb").cast("double"),
-                )
-                .orderBy(
-                    F.desc("score"), F.asc(F.concat_ws(" ", "a", "b"))
-                )
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            a, b = best[0]["a"], best[0]["b"]
-            fused = _fuse_wp(a, b)
-            merges.append((a, b, fused, int(best[0]["cnt"])))
-            if len(merges) == n_merges:
-                # r16 (guide §1.2, don't compute what you throw
-                # away): the final round's fold feeds no further
-                # aggregation — its checkpoint job was pure waste
-                break
-            prev, prev_owned = words, owns_current
-            words = (
-                words.select(
-                    _merge_fold(a, b, fused=fused)(F.col("syms"))
-                    .alias("syms"),
-                    "freq",
-                )
-                .localCheckpoint(eager=True)
-            )
-            owns_current = True
-            if prev_owned:
-                _release_local_checkpoint(prev)
-    finally:
-        if owns_current:
-            _release_local_checkpoint(words)
-    return merges
+    with table as words:
+        return _learn_merges(words, n_merges, min_count, True)
 
 
 def learn_wordpiece_vocab(
@@ -1002,31 +802,17 @@ def learn_wordpiece_vocab(
     through some other grain, and double-booking would be silent).
     Mutually exclusive with ``basic_tokenize`` (same reason as the
     merges trainer)."""
-    from wikiextractor_spark.functions.tokenizer import (
-        _check_train_specials,
-    )
-
     if vocab_size < 1:
         raise ValueError(
             f"learn_wordpiece_vocab: vocab_size must be >= 1, got "
             f"{vocab_size}"
         )
-    sp_texts, sp_pat = _check_train_specials(
-        special_tokens, "learn_wordpiece_vocab"
+    _check_merge_args(0, min_count, "learn_wordpiece_vocab")
+    sp_texts, table = _wp_words(
+        df, text_col, sample_fraction, seed, basic_tokenize,
+        special_tokens, "learn_wordpiece_vocab",
     )
-    _check_wp_specials_scope(
-        sp_pat, basic_tokenize, None, "learn_wordpiece_vocab"
-    )
-    frame, bc = _wp_word_table(
-        df, text_col, sample_fraction, seed,
-        basic_tokenize=basic_tokenize, special_pat=sp_pat,
-    )
-    try:
-        words = frame.localCheckpoint(eager=True)
-    finally:
-        if bc is not None:
-            bc.unpersist()
-    try:
+    with table as words:
         alphabet = sorted(
             r["s"]
             for r in words.select(
@@ -1049,37 +835,28 @@ def learn_wordpiece_vocab(
                 "truncating would silently UNK whole character "
                 "classes; raise vocab_size"
             )
-        merges = learn_wordpiece_merges(
-            df, vocab_size - len(head), text_col=text_col,
-            min_count=min_count, _words=words,
+        merges = _learn_merges(
+            words, vocab_size - len(head), min_count, True
         )
-        collide = sorted(
-            {f for _a, _b, f, _c in merges} & set(sp_texts)
+    collide = sorted({f for _a, _b, f, _c in merges} & set(sp_texts))
+    if collide:
+        raise ValueError(
+            f"learn_wordpiece_vocab: special token "
+            f"{collide[0]!r} collides with a trained vocabulary "
+            "entry — the corpus trained the literal text through "
+            "some other grain; pick different special texts"
         )
-        if collide:
-            raise ValueError(
-                f"learn_wordpiece_vocab: special token "
-                f"{collide[0]!r} collides with a trained vocabulary "
-                "entry — the corpus trained the literal text through "
-                "some other grain; pick different special texts"
-            )
-        # first occurrence wins (the train_bpe_tokenizer dedup
-        # discipline): a fused token can collide with an alphabet
-        # entry or an earlier merge when words literally carry the
-        # '##' marker or a later fuse re-creates an earlier pair —
-        # the serving artifact must stay duplicate-free
-        # (wordpiece_from_tokens raises on duplicates), so the
-        # result may come out shorter than vocab_size (stated)
-        seen = set(head)
-        out = list(head)
-        for _a, _b, f, _c in merges:
-            if f not in seen:
-                seen.add(f)
-                out.append(f)
-        return out
-    finally:
-        from wikiextractor_spark.functions.tokenizer import (
-            _release_local_checkpoint,
-        )
-
-        _release_local_checkpoint(words)
+    # first occurrence wins (the train_bpe_tokenizer dedup
+    # discipline): a fused token can collide with an alphabet entry or
+    # an earlier merge when words literally carry the '##' marker or a
+    # later fuse re-creates an earlier pair — the serving artifact
+    # must stay duplicate-free (wordpiece_from_tokens raises on
+    # duplicates), so the result may come out shorter than
+    # vocab_size (stated)
+    seen = set(head)
+    out = list(head)
+    for _a, _b, f, _c in merges:
+        if f not in seen:
+            seen.add(f)
+            out.append(f)
+    return out

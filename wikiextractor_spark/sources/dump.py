@@ -82,28 +82,20 @@ def discover_base_prefix(spark: SparkSession, path: str) -> str | None:
 
     Multi-file dumps: ``limit(400)`` over the whole load draws rows
     from whichever split Spark schedules first, so the header (always
-    in the FIRST file) could be missed.  The probe therefore resolves
-    the lexicographically-first member file driver-side and reads only
-    its head; non-local filesystems (no listable path) fall back to
-    the whole-load probe.
+    in the FIRST file) could be missed.  The probe therefore reads
+    only the head of the lexicographically-first file of Spark's own
+    listing, which skips ``_``/``.`` names (``_SUCCESS``, ``.crc``)
+    exactly as the page scan does.  The listing holds URIs, so the
+    first one is unquoted back into a path (``%20`` → space).
     """
-    import glob as _glob
-    import os as _os
     import re as _re
+    from urllib.parse import unquote
 
     base_re = _re.compile(r"<base>(.*?)</base>")
-    probe_path = path
-    try:
-        if _os.path.isdir(path):
-            members = sorted(_glob.glob(_os.path.join(path, "*")))
-        else:
-            members = sorted(_glob.glob(path))
-        members = [m for m in members if _os.path.isfile(m)]
-        if members:
-            probe_path = members[0]
-    except OSError:
-        pass
-    rows = spark.read.text(probe_path).limit(400).collect()
+    files = sorted(spark.read.text(path).inputFiles())
+    if not files:
+        return None
+    rows = spark.read.text(unquote(files[0])).limit(400).collect()
     for row in rows:
         m = base_re.search(row["value"])
         if m:
