@@ -269,3 +269,48 @@ def test_write_documents_structured(spark, tmp_path):
     assert set(back.columns) == {"page_id", "url", "title", "tags", "cleaned", "lines"}
     write_documents_structured(docs, str(tmp_path / "js"), fmt="jsonl")
     assert spark.read.json(str(tmp_path / "js")).count() == docs.count()
+
+
+@pytest.mark.parametrize("n", [0, -1])
+@pytest.mark.parametrize("writer", ["text", "structured"])
+def test_sinks_reject_non_positive_max_records_per_file(spark, tmp_path, writer, n):
+    """Spark reads ``maxRecordsPerFile`` below 1 as "no limit", so both
+    document writers must refuse it rather than write unsplit files."""
+    from wikiextractor_spark.sink import write_documents, write_documents_structured
+
+    df = spark.createDataFrame([("x",)], "value string")
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="max_records_per_file"):
+        if writer == "text":
+            write_documents(df, out, max_records_per_file=n)
+        else:
+            write_documents_structured(df, out, max_records_per_file=n)
+    assert not os.path.exists(out)
+
+
+def test_extract_to_text_runs_one_job(spark, tmp_path):
+    """The text record has no URL, so ``extract_to_text`` runs only its
+    write: no URL-prefix probe job.  AQE is off while the jobs are
+    counted, because it submits each shuffle stage of the spread (a
+    two-file dump has fewer scan splits than cores) as a job of its
+    own."""
+    d = tmp_path / "dump_dir"
+    d.mkdir()
+    head, _, tail = DUMP.partition("  <page>\n    <title>Beta</title>")
+    (d / "a_dump.xml").write_text(head + "</mediawiki>\n", encoding="utf8")
+    (d / "b_dump.xml").write_text(
+        "<mediawiki>\n  <page>\n    <title>Beta</title>" + tail, encoding="utf8"
+    )
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("extract-to-text-jobs", "extract_to_text job count")
+    try:
+        extract_to_text(spark, str(d), str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup("extract-to-text-jobs")) == 1
+    payload = "".join(p.read_text(encoding="utf8") for p in (tmp_path / "out").glob("part-*"))
+    assert "Alpha:" in payload and "Beta:" in payload

@@ -1125,40 +1125,23 @@ def main(argv: list[str] | None = None) -> None:
             docs.write.mode("overwrite").parquet(args.out)
             print(f"wrote {args.out}")
             return
+        from wikiextractor_spark.pipeline import dump_pages, pages_to_text
+
         if args.parser == "line":
-            from wikiextractor_spark.pipeline import _clean_and_compact
-            from wikiextractor_spark.sink import render_documents, write_documents
             from wikiextractor_spark.sources.dump import filter_pages
             from wikiextractor_spark.sources.lineparser import read_pages_lineparser
-            from wikiextractor_spark.sources.vital import (
-                apply_vital_filter,
-                read_vital_titles,
-            )
 
-            pages = filter_pages(
-                read_pages_lineparser(spark, args.infn).drop("page_id_raw"), cfg
-            )
-            vital = (
-                read_vital_titles(spark, args.vitalfn) if args.vitalfn else None
-            )
-            pages = apply_vital_filter(pages, vital)
-            write_documents(
-                render_documents(_clean_and_compact(pages, cfg)),
-                args.out,
-                compress=cfg.compress,
-                max_records_per_file=args.max_records_per_file,
-            )
+            pages = filter_pages(read_pages_lineparser(spark, args.infn).drop("page_id_raw"), cfg)
         else:
-            from wikiextractor_spark.pipeline import extract_to_text
-
-            extract_to_text(
-                spark,
-                args.infn,
-                args.out,
-                cfg,
-                vital_path=args.vitalfn,
-                max_records_per_file=args.max_records_per_file,
-            )
+            pages = dump_pages(spark, args.infn, cfg)
+        pages_to_text(
+            spark,
+            pages,
+            args.out,
+            cfg,
+            vital_path=args.vitalfn,
+            max_records_per_file=args.max_records_per_file,
+        )
         print(f"wrote {args.out}")
     finally:
         spark.stop()

@@ -26,11 +26,26 @@ from wikiextractor_spark.sources.vital import apply_vital_filter, read_vital_tit
 from wikiextractor_spark.udfs import make_clean_udf, make_compact_udf
 
 
-def _clean_and_compact(pages: DataFrame, cfg: ExtractorConfig) -> DataFrame:
-    """Kept pages → ``cleaned`` (the clean UDF on ``text``) and ``lines``
-    (the compact UDF on ``cleaned``)."""
-    return pages.withColumn("cleaned", make_clean_udf(cfg)(F.col("text"))).withColumn(
-        "lines", make_compact_udf(cfg.keep_sections)(F.col("cleaned"))
+def dump_pages(spark: SparkSession, dump_path: str, cfg: ExtractorConfig) -> DataFrame:
+    """Dump → kept pages.  A dump with fewer scan splits than cores
+    (one .xml or .xml.bz2 file) is spread once before the UDF stage; a
+    no-op otherwise."""
+    return spread_for_compute(filter_pages(read_pages(spark, dump_path), cfg))
+
+
+def _clean_and_compact(
+    spark: SparkSession,
+    pages: DataFrame,
+    cfg: ExtractorConfig,
+    vital_path: str | None,
+) -> DataFrame:
+    """Kept pages → the vital filter → ``cleaned`` (the clean UDF on
+    ``text``) and ``lines`` (the compact UDF on ``cleaned``)."""
+    vital = read_vital_titles(spark, vital_path) if vital_path else None
+    return (
+        apply_vital_filter(pages, vital)
+        .withColumn("cleaned", make_clean_udf(cfg)(F.col("text")))
+        .withColumn("lines", make_compact_udf(cfg.keep_sections)(F.col("cleaned")))
     )
 
 
@@ -43,20 +58,32 @@ def extract_documents(
     """Dump → cleaned documents:
     ``(page_id, url, title, tags, cleaned, lines)``."""
     prefix = discover_base_prefix(spark, dump_path)
-    # a dump with fewer scan splits than cores (one .xml or .xml.bz2
-    # file) is spread once before the UDF stage; a no-op otherwise
-    pages = spread_for_compute(filter_pages(read_pages(spark, dump_path), cfg))
-
-    vital = read_vital_titles(spark, vital_path) if vital_path else None
-    pages = apply_vital_filter(pages, vital)
-
     return (
-        _clean_and_compact(pages, cfg)
+        _clean_and_compact(spark, dump_pages(spark, dump_path, cfg), cfg, vital_path)
         .withColumn(
             "url",
             F.format_string("%s?curid=%s", F.lit(prefix or ""), F.col("page_id")),
         )
         .select("page_id", "url", "title", "tags", "cleaned", "lines")
+    )
+
+
+def pages_to_text(
+    spark: SparkSession,
+    pages: DataFrame,
+    out_dir: str,
+    cfg: ExtractorConfig = ExtractorConfig(),
+    vital_path: str | None = None,
+    max_records_per_file: int | None = None,
+) -> None:
+    """Kept pages → the vital filter → clean and compact → documents in
+    the reference's record format, written to ``out_dir``.  The record
+    has no URL, so nothing here probes the dump for its prefix."""
+    write_documents(
+        render_documents(_clean_and_compact(spark, pages, cfg, vital_path)),
+        out_dir,
+        compress=cfg.compress,
+        max_records_per_file=max_records_per_file,
     )
 
 
@@ -70,12 +97,8 @@ def extract_to_text(
 ) -> None:
     """The reference CLI, end to end: write cleaned documents in the
     reference's record format to ``out_dir``."""
-    docs = extract_documents(spark, dump_path, cfg, vital_path)
-    write_documents(
-        render_documents(docs),
-        out_dir,
-        compress=cfg.compress,
-        max_records_per_file=max_records_per_file,
+    pages_to_text(
+        spark, dump_pages(spark, dump_path, cfg), out_dir, cfg, vital_path, max_records_per_file
     )
 
 

@@ -5,13 +5,34 @@ bench, driver) runs the same configuration.  Values target the
 driver's local[32] harness but are chosen to be the right defaults on
 a real multi-executor cluster too (AQE, skew-join handling, Arrow
 batching) — see SURVEY.md §4.2.
+
+Python workers start through ``wikiextractor_spark.daemon``
+(``spark.python.daemon.module``).  Spark's default puts its own
+pyspark, py4j and spark-core archives on every worker's ``sys.path``,
+and every task's ``importlib.invalidate_caches()`` then re-reads each
+archive's central directory, 0.1–0.25 s per task; the daemon drops
+the archives when the installed pyspark and py4j are the same
+versions.  The conf is static, so it is set only here: sessions built
+elsewhere (the driver harness, ``tools/driver_sim.py`` and
+``tools/slot_check.py``, and those passed to ``tune()``) keep Spark's
+default daemon.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _workers_import_package() -> bool:
+    """Whether a local worker (started in this process's directory with
+    its ``PYTHONPATH``) imports this package, and so its daemon."""
+    roots = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    return _PACKAGE_ROOT in {os.path.abspath(r) for r in roots if r}
 
 
 def get_spark(app_name: str = "wikiextractor-spark", cpus: int | None = None) -> SparkSession:
@@ -39,6 +60,8 @@ def get_spark(app_name: str = "wikiextractor-spark", cpus: int | None = None) ->
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if _workers_import_package():
+        builder = builder.config("spark.python.daemon.module", "wikiextractor_spark.daemon")
     spark = builder.getOrCreate()
     return spark
 

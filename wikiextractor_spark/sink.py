@@ -16,7 +16,7 @@ per row.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, DataFrameWriter, functions as F
 
 
 def render_documents(df: DataFrame) -> DataFrame:
@@ -33,6 +33,16 @@ def render_documents(df: DataFrame) -> DataFrame:
     )
 
 
+def _split_files(writer: DataFrameWriter, max_records_per_file: int | None) -> DataFrameWriter:
+    """``maxRecordsPerFile`` on ``writer``.  Spark reads a value below 1
+    as "no limit", so one that would silently do nothing is an error."""
+    if max_records_per_file is None:
+        return writer
+    if max_records_per_file < 1:
+        raise ValueError(f"max_records_per_file must be >= 1, got {max_records_per_file}")
+    return writer.option("maxRecordsPerFile", max_records_per_file)
+
+
 def write_documents(
     df: DataFrame,
     out_dir: str,
@@ -41,9 +51,7 @@ def write_documents(
 ) -> None:
     """Write rendered records as text; bz2 when ``compress`` (the
     ``--compress`` flag, reference ``WikiExtractor.py:692``)."""
-    writer = df.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
+    writer = _split_files(df.write.mode("overwrite"), max_records_per_file)
     if compress:
         writer = writer.option("compression", "bzip2")
     writer.text(out_dir)
@@ -64,8 +72,7 @@ def write_documents_structured(
     writer = docs.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
+    writer = _split_files(writer, max_records_per_file)
     if fmt == "parquet":
         writer.parquet(out_dir)
     elif fmt in ("json", "jsonl"):
