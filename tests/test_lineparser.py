@@ -210,3 +210,24 @@ def test_cli_line_parser(spark, tmp_path, monkeypatch):
     parts = [p for p in os.listdir(out) if p.startswith("part-")]
     payload = "".join((out / p).read_text(encoding="utf8") for p in parts)
     assert "Alpha:" in payload and "Redirected" not in payload
+
+
+def test_cli_line_parser_spreads_pages(spark, tmp_path, monkeypatch):
+    """The line parser reads a dump file in one task; the CLI spreads
+    its kept pages over the cores before the clean and compact UDFs,
+    as it does for the xml source."""
+    import wikiextractor_spark.pipeline as pipeline
+    from wikiextractor_spark.__main__ import main
+
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 2:
+        pytest.skip("one core: nothing to spread over")
+    dump = tmp_path / "dump.xml"
+    dump.write_text(WELL_FORMED, encoding="utf8")
+    seen = []
+    monkeypatch.setattr(
+        pipeline, "pages_to_text", lambda spark, pages, *a, **k: seen.append(pages)
+    )
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    main(["--infn", str(dump), "--out", str(tmp_path / "out"), "--parser", "line"])
+    assert seen[0].rdd.getNumPartitions() == cores

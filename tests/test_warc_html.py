@@ -672,22 +672,12 @@ def test_cli_incompatible_flag_at_default_value_still_errors():
 
 def test_cli_scoped_defaults_resolve():
     """Unsupplied source-scoped flags resolve to their documented
-    defaults after the sentinel dance, and the policy tuples can
-    never desync from the defaults table."""
-    from wikiextractor_spark.__main__ import (
-        _DOCS_ONLY,
-        _DUMP_ONLY,
-        _SCOPED_DEFAULTS,
-        _WARC_ONLY,
-        _resolve_scoped,
-        build_parser,
-    )
+    defaults, and only the flags actually given count as supplied."""
+    from wikiextractor_spark.__main__ import _parse, build_parser
 
-    import wikiextractor_spark.__main__ as cli_mod
-
-    args = build_parser().parse_args(["--infn", "x"])
-    supplied = _resolve_scoped(args)
-    assert supplied == set()
+    parser = build_parser()
+    args, given = _parse(parser, ["--infn", "x"])
+    assert given == {"infn", "source"}
     assert args.parser == "xml"
     assert args.incubator == ""
     assert args.compress is False
@@ -697,22 +687,33 @@ def test_cli_scoped_defaults_resolve():
     assert args.with_meta is False
     assert args.tokenize is None
     assert args.shard_seed == ""
-    assert set(_WARC_ONLY + _DUMP_ONLY + _DOCS_ONLY) == set(
-        _SCOPED_DEFAULTS
-    )
+    assert args.out == "wiki_out"
+    assert set(parser.scoped) <= set(vars(args))
+    _, given = _parse(parser, ["--infn", "x", "--parser", "xml"])
+    assert given == {"infn", "source", "parser"}
 
 
-def test_cli_sentinel_policy_guard(monkeypatch):
-    """A sentinel-defaulted flag missing from the policy tuples would
-    leak the raw _UNSET object into args — build_parser fails fast
-    instead (r12 review finding)."""
-    import pytest
+def test_cli_sentinel_policy_guard():
+    """Every flag but --infn, --source and --out belongs to exactly one
+    --source, and is declared with argparse.SUPPRESS so that argparse
+    itself tells whether it was given."""
+    import argparse
 
-    import wikiextractor_spark.__main__ as cli
+    from wikiextractor_spark.__main__ import build_parser
 
-    monkeypatch.setattr(cli, "_DUMP_ONLY", cli._DUMP_ONLY[:-1])
-    with pytest.raises(AssertionError, match="policy tuples"):
-        cli.build_parser()
+    parser = build_parser()
+    dests = {a.dest for a in parser._actions} - {"help"}
+    assert set(parser.scoped) == dests - {"infn", "source", "out"}
+    assert {s for s, _ in parser.scoped.values()} <= {
+        "dump", "wet", "warc", "docs"
+    }
+    for a in parser._actions:
+        if a.dest in parser.scoped:
+            assert a.default is argparse.SUPPRESS, a.dest
+    # --help lists each scoped flag under its source's group
+    groups = {g.title: g._group_actions for g in parser._action_groups}
+    for dest, (source, _) in parser.scoped.items():
+        assert dest in {a.dest for a in groups[f"--source {source}"]}
 
 
 def test_extract_main_content_is_native(spark):
@@ -751,24 +752,25 @@ def test_raw_crawl_to_prepare_corpus(spark, tmp_path):
 
 
 def test_cli_reverse_policy_guard(monkeypatch):
-    """The REVERSE desync (r12 ADVICE): a dest added to the policy
-    tuples whose argparse default is NOT the sentinel would make
-    _resolve_scoped treat it as always-supplied — every run with the
-    other --source would spuriously error.  build_parser fails fast on
-    both a non-sentinel default and a dest missing from the parser."""
-    import pytest
-
+    """A run giving only global flags passes the source and docs-mode
+    checks for every --source: no scoped flag may count as supplied
+    when it was not given (else every run of the other sources would
+    spuriously error)."""
     import wikiextractor_spark.__main__ as cli
 
-    orig = cli._DUMP_ONLY
-    # --source exists but its default is a real value, not _UNSET
-    # (r14: --out became the one sentinel-defaulted GLOBAL flag, so
-    # it no longer serves as this test's non-sentinel example)
-    monkeypatch.setattr(cli, "_DUMP_ONLY", orig + ("source",))
-    with pytest.raises(AssertionError, match=r"\['source'\]"):
-        cli.build_parser()
-    # a policy entry with no parser action at all — patched from the
-    # ORIGINAL tuple so this case is pinned independently of 'out'
-    monkeypatch.setattr(cli, "_DUMP_ONLY", orig + ("ghost",))
-    with pytest.raises(AssertionError, match=r"\['ghost'\]"):
-        cli.build_parser()
+    class Accepted(Exception):
+        pass
+
+    def boot(*args, **kwargs):
+        raise Accepted
+
+    monkeypatch.setattr(cli, "get_spark", boot)
+    for source in ("dump", "wet", "warc"):
+        for extra in ([], ["--out", "o"]):
+            with pytest.raises(Accepted):
+                cli.main(["--infn", "x", "--source", source, *extra])
+    # docs needs a mode or a prepare flag; nothing else is implied
+    parser = cli.build_parser()
+    args, given = cli._parse(parser, ["--infn", "x", "--source", "docs", "--gopher"])
+    cli._check_flag_compat(parser, args, given)
+    cli._validate_docs_args(parser, args, given)

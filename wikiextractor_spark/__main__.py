@@ -20,13 +20,22 @@ writes the engine's ``documents`` surface as parquet, ready for
 
 Engine extension: ``--source docs`` reads a parquet ``documents``
 surface (the wet/warc output, or any frame with doc_id + text) and
-runs the TOKENIZE→[PACK]→[SHARD] tail of the training-data path:
-``--tokenize wordpiece --vocab vocab.txt`` (published BERT format),
-``--tokenize bpe --vocab vocab.json --merges merges.txt`` (published
-GPT-class byte-level formats), or ``--tokenize unigram --lm
-table.parquet|tsv``; ``--pack BUDGET`` assembles packed training
-sequences, ``--shards N`` writes the deterministic (id, seed)
-shard layout.
+runs the [PREPARE]→TOKENIZE→[PACK]→[SHARD] tail of the training-data
+path: ``--tokenize wordpiece --vocab vocab.txt`` (published BERT
+format), ``--tokenize bpe --vocab vocab.json --merges merges.txt``
+(published GPT-class byte-level formats), ``--tokenize unigram --lm
+table.parquet|tsv``, or ``--tokenizer-json FILE``; ``--pack BUDGET``
+assembles packed training sequences, ``--shards N`` writes the
+deterministic (id, seed) shard layout.  ``--train-tokenizer`` trains
+a tokenizer instead, and the prepare flags alone write the prepared
+documents.
+
+Every flag but ``--infn``, ``--source`` and ``--out`` belongs to one
+``--source`` and is declared in that source's argument group, which is
+also how ``--help`` lists it.  A flag given with another source is a
+usage error, never silently ignored, and so is a docs flag outside the
+tokenizer modes it applies to (``_MODE_SCOPE``).  Every usage error
+exits 2 before a Spark session starts.
 """
 
 from __future__ import annotations
@@ -37,107 +46,40 @@ from wikiextractor_spark.config import ExtractorConfig
 from wikiextractor_spark.session import get_spark
 
 
-# sentinel default for every source-scoped flag: "was this flag
-# actually supplied" must be distinguishable from "was it left at its
-# default", or an explicitly-passed default value (--source wet
-# --parser xml) silently skips the compat check instead of erroring
-# (r11 ADVICE).  The real defaults live in _SCOPED_DEFAULTS and are
-# resolved post-parse.
-_UNSET = object()
+def _int_at_least(low: int):
+    """argparse ``type``: an integer no smaller than ``low``."""
 
-# dest → real default, for every flag scoped to one --source.  The
-# resolution loop raises KeyError if a _WARC_ONLY/_DUMP_ONLY entry is
-# missing here, so the two tables cannot silently desync.
-_SCOPED_DEFAULTS = {
-    "incubator": "",
-    "compress": False,
-    "parser": "xml",
-    "vitalfn": None,
-    "max_records_per_file": None,
-    "main_content": False,
-    "with_meta": False,
-    "tokenize": None,
-    "tokenizer_json": None,
-    "charsmap": "record",
-    "vocab": None,
-    "merges": None,
-    "lm": None,
-    "space_marker": None,
-    "pack": None,
-    "shards": None,
-    "shard_seed": "",
-    "basic_tokenize": False,
-    "train_tokenizer": None,
-    "vocab_size": None,
-    "byte_level": False,
-    "prune_rank": None,
-    "special_token": None,
-    "out_model": None,
-    "train_sample_fraction": None,
-    "target_lang": None,
-    "langid_model": None,
-    "min_quality": None,
-    "gopher": False,
-    "normalize": None,
-    "dedup": None,
-    "sentence_span_dedup": None,
-}
+    def integer(text: str) -> int:
+        value = int(text)
+        if value < low:
+            raise argparse.ArgumentTypeError(f"must be >= {low}, got {value}")
+        return value
+
+    return integer
 
 
-class _AppendFromUnset(argparse.Action):
-    """``action="append"`` compatible with the _UNSET sentinel
-    default: argparse's builtin append copies the DEFAULT and calls
-    ``.append`` on it, which explodes on the sentinel object — this
-    one starts a fresh list on first use, so "was the flag supplied"
-    stays the sentinel test like every other scoped flag."""
-
-    def __call__(self, parser, namespace, values, option_string=None):
-        cur = getattr(namespace, self.dest, _UNSET)
-        if cur is _UNSET or cur is None:
-            cur = []
-            setattr(namespace, self.dest, cur)
-        cur.append(values)
+def _fraction(text: str) -> float:
+    """argparse ``type``: a float in (0, 1]."""
+    try:
+        value = float(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not a number: {text!r}") from None
+    if not 0.0 < value <= 1.0:
+        raise argparse.ArgumentTypeError(f"must be in (0, 1], got {text}")
+    return value
 
 
 def build_parser() -> argparse.ArgumentParser:
+    """The CLI parser.  Each source-scoped flag is declared once, in its
+    source's group, with ``default=argparse.SUPPRESS``: argparse then
+    leaves it out of the namespace unless it was given, which is the
+    "was it supplied" test.  ``parser.scoped`` maps each such dest to
+    ``(source, real default)``; :func:`_parse` fills the defaults in."""
     p = argparse.ArgumentParser(
         prog="wikiextractor_spark", description="PySpark WikiExtractor"
     )
+    p.scoped = {}
     p.add_argument("--infn", required=True, help="dump file (xml/.bz2/.gz)")
-    p.add_argument(
-        "--incubator",
-        default=_UNSET,
-        help="incubator language code (e.g. enm); keeps Wp/LANG/Title pages",
-    )
-    p.add_argument(
-        "--compress", action="store_true", default=_UNSET,
-        help="bzip2 output",
-    )
-    # sentinel-defaulted so --train-tokenizer can REJECT an
-    # explicitly-supplied --out instead of silently ignoring it (r14
-    # review; the no-silently-ignored-flags discipline) — resolved to
-    # its real default in main(), and exempt from the policy-tuple
-    # assertion below because it is global, not source-scoped
-    p.add_argument(
-        "--out", default=_UNSET,
-        help="output directory (default: wiki_out; not used by "
-        "--train-tokenizer, whose artifacts go under --out-model)",
-    )
-    p.add_argument(
-        "--parser",
-        choices=("xml", "line"),
-        default=_UNSET,
-        help="xml = splittable Catalyst-native source (default); "
-        "line = bug-compatible reference parser (one task per file)",
-    )
-    p.add_argument("--vitalfn", default=_UNSET, help="vital titles side file")
-    p.add_argument(
-        "--max-records-per-file",
-        type=int,
-        default=_UNSET,
-        help="size-split the output (the reference's intended "
-        "OutputSplitter behavior)",
-    )
     p.add_argument(
         "--source",
         choices=("dump", "wet", "warc", "docs"),
@@ -148,55 +90,94 @@ def build_parser() -> argparse.ArgumentParser:
         "documents surface for the tokenize/pack/shard tail. "
         "wet/warc/docs write parquet to --out",
     )
+    # SUPPRESS too, so --train-tokenizer can reject a given --out
     p.add_argument(
-        "--main-content",
-        action="store_true",
-        default=_UNSET,
-        help="(--source warc) extract the article body via the "
-        "block-level link-density classifier instead of all text",
+        "--out", default=argparse.SUPPRESS,
+        help="output directory (default: wiki_out; not used by "
+        "--train-tokenizer, whose artifacts go under --out-model)",
     )
-    p.add_argument(
-        "--with-meta",
-        action="store_true",
-        default=_UNSET,
-        help="(--source warc) keep declared <title> and <html lang> "
-        "columns",
+
+    def source_group(source: str, description: str):
+        group = p.add_argument_group(f"--source {source}", description)
+
+        def add(*flags, default=None, **kw) -> None:
+            action = group.add_argument(
+                *flags, default=argparse.SUPPRESS, **kw
+            )
+            p.scoped[action.dest] = (source, default)
+
+        return add
+
+    dump = source_group("dump", "MediaWiki XML dump (the default)")
+    dump(
+        "--incubator", default="",
+        help="incubator language code (e.g. enm); keeps Wp/LANG/Title pages",
     )
-    p.add_argument(
-        "--tokenize",
-        choices=("wordpiece", "bpe", "unigram"),
-        default=_UNSET,
-        help="(--source docs) tokenize text to id arrays: wordpiece "
+    dump("--compress", action="store_true", default=False, help="bzip2 output")
+    dump(
+        "--parser", choices=("xml", "line"), default="xml",
+        help="xml = splittable Catalyst-native source (default); "
+        "line = bug-compatible reference parser (one task per file)",
+    )
+    dump("--vitalfn", help="vital titles side file")
+    # Spark reads maxRecordsPerFile < 1 as "no limit", so such a value
+    # would silently do nothing
+    dump(
+        "--max-records-per-file", type=_int_at_least(1),
+        help="size-split the output (the reference's intended "
+        "OutputSplitter behavior)",
+    )
+
+    warc = source_group("warc", "raw WARC response records")
+    warc(
+        "--main-content", action="store_true", default=False,
+        help="extract the article body via the block-level "
+        "link-density classifier instead of all text",
+    )
+    warc(
+        "--with-meta", action="store_true", default=False,
+        help="keep declared <title> and <html lang> columns",
+    )
+
+    docs = source_group(
+        "docs",
+        "a parquet documents surface: prepare, then tokenize "
+        "(--tokenize, --tokenizer-json) or train a tokenizer "
+        "(--train-tokenizer)",
+    )
+    docs(
+        "--tokenize", choices=("wordpiece", "bpe", "unigram"),
+        help="tokenize text to id arrays: wordpiece "
         "(--vocab vocab.txt, published BERT format), bpe (--vocab "
         "vocab.json --merges merges.txt, published GPT-class "
         "byte-level formats), unigram (--lm table.parquet|tsv)",
     )
-    p.add_argument(
-        "--tokenizer-json", default=_UNSET,
-        help="(--source docs) tokenize via a single-file published "
+    docs(
+        "--tokenizer-json",
+        help="tokenize via a single-file published "
         "tokenizer.json — family, grain, vocabulary/merges, and "
         "added tokens all come from the file, so no --tokenize/"
         "--vocab/--merges/--lm flags apply; composes with --pack/"
         "--shards like the per-family serve modes",
     )
-    p.add_argument(
-        "--charsmap", choices=("record", "nfkc"), default=_UNSET,
+    docs(
+        "--charsmap", choices=("record", "nfkc"), default="record",
         help="(--tokenizer-json) what a SentencePiece Precompiled "
         "normalizer's opaque charsmap IS: 'record' (default) keeps "
         "it a printed divergence; 'nfkc' asserts the standard "
         "NFKC/nmt_nfkc charsmap and serves the engine's NFKC kernel "
         "per segment (the T5/Llama-class published normalization)",
     )
-    p.add_argument(
-        "--vocab", default=_UNSET,
+    docs(
+        "--vocab",
         help="(--tokenize wordpiece|bpe) vocabulary artifact path. "
         "The SUFFIX selects the family: wordpiece .txt = published "
         "vocab.txt, else the engine parquet; bpe .json = published "
         "byte-level vocab.json (keep the canonical suffix — any "
         "other name is read as the engine's char-grain parquet)",
     )
-    p.add_argument(
-        "--basic-tokenize", action="store_true", default=_UNSET,
+    docs(
+        "--basic-tokenize", action="store_true", default=False,
         help="(--tokenize wordpiece, or --train-tokenizer "
         "wordpiece) apply the published "
         "BasicTokenizer stage (lowercase, accent strip, punctuation "
@@ -207,20 +188,16 @@ def build_parser() -> argparse.ArgumentParser:
         "RAW-trained artifact UNKs most words under this stage, and "
         "vice versa)",
     )
-    p.add_argument(
-        "--merges", default=_UNSET,
+    docs(
+        "--merges",
         help="(--tokenize bpe) merges artifact path: .txt = the "
         "published merges.txt (byte-level family, pairs with "
         "vocab.json), anything else = the engine's parquet merges "
         "(char-grain family, pairs with the parquet vocab)",
     )
-    p.add_argument(
-        "--lm", default=_UNSET,
-        help="(--tokenize unigram) token→logprob table path",
-    )
-    p.add_argument(
-        "--space-marker", nargs="?", const="▁", default=_UNSET,
-        metavar="MARKER",
+    docs("--lm", help="(--tokenize unigram) token→logprob table path")
+    docs(
+        "--space-marker", nargs="?", const="▁", metavar="MARKER",
         help="(--tokenize unigram, or --train-tokenizer unigram) "
         "serve or TRAIN at the SentencePiece marker grain: prefix "
         "each word with MARKER (default the "
@@ -228,55 +205,51 @@ def build_parser() -> argparse.ArgumentParser:
         "pieces match — without it a published Llama/T5 vocabulary "
         "degrades to character/unk streams",
     )
-    p.add_argument(
-        "--pack", type=int, default=_UNSET,
-        help="(--source docs) assemble packed training sequences "
-        "with this token budget",
+    docs(
+        "--pack", type=_int_at_least(1),
+        help="assemble packed training sequences with this token budget",
     )
-    p.add_argument(
-        "--shards", type=int, default=_UNSET,
-        help="(--source docs) write the deterministic shard layout "
-        "with this many shards",
+    docs(
+        "--shards", type=_int_at_least(1),
+        help="write the deterministic shard layout with this many shards",
     )
-    p.add_argument(
-        "--shard-seed", default=_UNSET,
-        help="(--source docs) shard order seed (one per epoch)",
+    docs(
+        "--shard-seed", default="",
+        help="(--shards) shard order seed (one per epoch)",
     )
-    p.add_argument(
-        "--target-lang", default=_UNSET,
-        help="(--source docs) prepare: keep only documents the "
-        "stopword-profile language ID assigns this code",
+    docs(
+        "--target-lang",
+        help="prepare: keep only documents the stopword-profile "
+        "language ID assigns this code",
     )
-    p.add_argument(
-        "--langid-model", default=_UNSET, metavar="PATH",
-        help="(--source docs) prepare: parquet lang-ID artifact "
+    docs(
+        "--langid-model", metavar="PATH",
+        help="prepare: parquet lang-ID artifact "
         "(save_langid_model) — routes --target-lang through the "
         "TRAINED NB classifier instead of the stopword heuristic",
     )
-    p.add_argument(
+    docs(
         "--train-tokenizer", choices=("bpe", "wordpiece", "unigram"),
-        default=_UNSET,
-        help="(--source docs) TRAIN a tokenizer on the (prepared) "
+        help="TRAIN a tokenizer on the (prepared) "
         "corpus and persist its serving artifacts under --out-model "
         "— the no-Python train leg; serve them later with --tokenize",
     )
-    p.add_argument(
-        "--vocab-size", type=int, default=_UNSET,
-        help="(--source docs) --train-tokenizer: total vocabulary "
+    docs(
+        "--vocab-size", type=_int_at_least(1),
+        help="--train-tokenizer: total vocabulary "
         "budget (bpe derives its merge count as budget minus the "
         "corpus alphabet)",
     )
-    p.add_argument(
-        "--prune-rank", choices=("count", "loss"), default=_UNSET,
-        help="(--source docs) --train-tokenizer unigram: prune-round "
+    docs(
+        "--prune-rank", choices=("count", "loss"),
+        help="--train-tokenizer unigram: prune-round "
         "candidate ranking — loss = Kudo's likelihood-loss-if-"
         "removed (the published SentencePiece criterion), count = "
         "expected count (the cheap default)",
     )
-    p.add_argument(
-        "--special-token", action=_AppendFromUnset, default=_UNSET,
-        metavar="TEXT", dest="special_token",
-        help="(--source docs) --train-tokenizer: reserve an ADDED "
+    docs(
+        "--special-token", action="append", metavar="TEXT",
+        help="--train-tokenizer: reserve an ADDED "
         "token (repeatable; e.g. --special-token '<|endoftext|>') — "
         "its literal text is protected from training on every "
         "family; ids follow the published layouts (bpe: END of the "
@@ -285,9 +258,9 @@ def build_parser() -> argparse.ArgumentParser:
         "convention; unigram: beyond the piece table in the written "
         "tokenizer.json).  Not combinable with --basic-tokenize",
     )
-    p.add_argument(
-        "--byte-level", action="store_true", default=_UNSET,
-        help="(--source docs) --train-tokenizer bpe: train at the "
+    docs(
+        "--byte-level", action="store_true", default=False,
+        help="--train-tokenizer bpe: train at the "
         "published byte-level GPT-2 grain (GPT-2 pre-tokenizer + "
         "byte encode, 256-byte base alphabet) and ALSO export the "
         "published vocab.json + merges.txt — serve those with "
@@ -295,390 +268,197 @@ def build_parser() -> argparse.ArgumentParser:
         "the suffixes.  Serve-side byte-level needs no flag (the "
         "artifact format implies the grain)",
     )
-    p.add_argument(
-        "--out-model", default=_UNSET, metavar="DIR",
-        help="(--source docs) --train-tokenizer: artifact directory",
+    docs(
+        "--out-model", metavar="DIR",
+        help="--train-tokenizer: artifact directory",
     )
-    p.add_argument(
-        "--train-sample-fraction", type=float, default=_UNSET,
-        help="(--source docs) --train-tokenizer: train on this "
+    docs(
+        "--train-sample-fraction", type=_fraction,
+        help="--train-tokenizer: train on this "
         "corpus sample (the web-scale training trade)",
     )
-    p.add_argument(
-        "--min-quality", type=float, default=_UNSET,
-        help="(--source docs) prepare: composite quality-score floor",
+    docs(
+        "--min-quality", type=float,
+        help="prepare: composite quality-score floor",
     )
-    p.add_argument(
-        "--gopher", action="store_true", default=_UNSET,
-        help="(--source docs) prepare: apply the Gopher document-"
-        "shape rules",
+    docs(
+        "--gopher", action="store_true", default=False,
+        help="prepare: apply the Gopher document-shape rules",
     )
-    p.add_argument(
+    docs(
         "--normalize", choices=("NFC", "NFD", "NFKC", "NFKD"),
-        default=_UNSET,
-        help="(--source docs) prepare: Unicode-canonicalize the text "
+        help="prepare: Unicode-canonicalize the text "
         "before content-keyed stages",
     )
-    p.add_argument(
-        "--dedup", choices=("exact", "near"), default=_UNSET,
-        help="(--source docs) prepare: document-grain dedup policy",
+    docs(
+        "--dedup", choices=("exact", "near"),
+        help="prepare: document-grain dedup policy",
     )
-    p.add_argument(
-        "--sentence-span-dedup", type=int, default=_UNSET,
-        metavar="MIN_COUNT",
-        help="(--source docs) prepare: C4 keep-first three-sentence-"
+    docs(
+        "--sentence-span-dedup", type=_int_at_least(2), metavar="MIN_COUNT",
+        help="prepare: C4 keep-first three-sentence-"
         "span dedup at this repeat threshold",
     )
-    # a flag declared with the sentinel default but absent from the
-    # policy tuples would leak the raw _UNSET object into args (the
-    # resolution loop only walks the tuples) — fail at parser
-    # construction, not at first use of the bogus value
-    scoped = set(_WARC_ONLY + _DUMP_ONLY + _DOCS_ONLY)
-    unresolved = [
-        a.dest for a in p._actions
-        if a.default is _UNSET and a.dest not in scoped
-        and a.dest != "out"  # global sentinel, resolved in main()
-    ]
-    if unresolved:
-        raise AssertionError(
-            f"sentinel-defaulted flags missing from the policy "
-            f"tuples: {unresolved} — add them to _WARC_ONLY, "
-            "_DUMP_ONLY or _DOCS_ONLY (and _SCOPED_DEFAULTS)"
-        )
-    # and the REVERSE desync (r12 ADVICE): a dest listed in the policy
-    # tuples whose argparse default is NOT the sentinel would make
-    # _resolve_scoped treat the flag as always-supplied, so every run
-    # with the other --source spuriously errors
-    defaults = {a.dest: a.default for a in p._actions}
-    not_sentinel = [
-        d for d in sorted(scoped)
-        if d not in defaults or defaults[d] is not _UNSET
-    ]
-    if not_sentinel:
-        raise AssertionError(
-            f"policy-tuple flags whose parser default is not _UNSET "
-            f"(or that are missing from the parser): {not_sentinel} — "
-            "declare them with default=_UNSET"
-        )
     return p
 
 
-# which flags belong to which --source is POLICY (stated here once);
-# whether a flag was actually supplied is the sentinel test in
-# _resolve_scoped — an explicitly-typed default value counts as
-# supplied, unlike a value-vs-default compare
-_WARC_ONLY = ("main_content", "with_meta")
-_DUMP_ONLY = (
-    "parser", "vitalfn", "compress", "incubator", "max_records_per_file",
-)
-_DOCS_ONLY = (
-    "tokenize", "tokenizer_json", "charsmap",
-    "vocab", "merges", "lm", "pack", "shards", "shard_seed",
-    "basic_tokenize", "space_marker",
-    "train_tokenizer", "vocab_size", "byte_level", "prune_rank",
-    "special_token", "out_model",
-    "train_sample_fraction",
-    "target_lang", "langid_model", "min_quality", "gopher", "normalize",
-    "dedup", "sentence_span_dedup",
-)
-
-#: the prepare-stage dests — --source docs needs --tokenize OR at
-#: least one of these (prepare-only runs write prepared documents)
-_PREPARE_FLAGS = (
-    "target_lang", "min_quality", "gopher", "normalize", "dedup",
-    "sentence_span_dedup",
-)
+def _parse(parser: argparse.ArgumentParser, argv):
+    """``argv`` → (the namespace with every default filled in, the
+    dests given on the command line)."""
+    args = parser.parse_args(argv)
+    given = set(vars(args))
+    for dest, (_, default) in parser.scoped.items():
+        vars(args).setdefault(dest, default)
+    vars(args).setdefault("out", "wiki_out")
+    return args, given
 
 
-def _resolve_scoped(args) -> set[str]:
-    """Replace every source-scoped sentinel with its real default and
-    return the dests the user EXPLICITLY supplied (including at the
-    default value).  KeyError here means a flag was added to a policy
-    tuple without a _SCOPED_DEFAULTS entry."""
-    supplied: set[str] = set()
-    for dest in _WARC_ONLY + _DUMP_ONLY + _DOCS_ONLY:
-        if getattr(args, dest) is _UNSET:
-            setattr(args, dest, _SCOPED_DEFAULTS[dest])
-        else:
-            supplied.add(dest)
-    return supplied
+def _flag(dest: str) -> str:
+    return "--" + dest.replace("_", "-")
 
 
 def _check_flag_compat(
-    parser: argparse.ArgumentParser, args, supplied: set[str],
+    parser: argparse.ArgumentParser, args, given: set[str],
 ) -> None:
-    """Reject flag/source combinations that would be silently ignored
-    — a typo like ``--source wet --main-content`` must not produce a
-    plausible-looking but differently-shaped output."""
-
-    def names(dests) -> list[str]:
-        return [
-            "--" + d.replace("_", "-") for d in dests if d in supplied
-        ]
-
-    def reject(flags: list[str], source: str) -> None:
-        if flags:
-            parser.error(
+    """Reject flags of another --source: a typo like ``--source wet
+    --main-content`` must not produce a plausible-looking but
+    differently-shaped output."""
+    wrong: dict[str, list[str]] = {}
+    for dest, (source, _) in parser.scoped.items():
+        if dest in given and source != args.source:
+            wrong.setdefault(source, []).append(_flag(dest))
+    if wrong:
+        parser.error(
+            "; ".join(
                 f"{', '.join(flags)} appl"
-                f"{'y' if len(flags) > 1 else 'ies'} only to "
-                f"--source {source} (got --source {args.source})"
+                f"{'y' if len(flags) > 1 else 'ies'} only to --source {source}"
+                for source, flags in wrong.items()
             )
-
-    if args.source != "warc":
-        reject(names(_WARC_ONLY), "warc")
-    if args.source != "dump":
-        reject(names(_DUMP_ONLY), "dump")
-    if args.source != "docs":
-        reject(names(_DOCS_ONLY), "docs")
+            + f" (got --source {args.source})"
+        )
 
 
-def _prepare_requested(args) -> bool:
-    """True when any prepare-stage flag was given — ONE home for the
-    predicate (r13 review: validation and execution must agree, and
-    `not in (None, False)` treated --min-quality 0 as unset because
-    0.0 == False in Python)."""
-    return bool(args.gopher) or any(
-        getattr(args, d) is not None
-        for d in _PREPARE_FLAGS
-        if d != "gopher"
-    )
+#: the prepare-stage dests — --source docs needs a tokenizer mode OR
+#: at least one of these (prepare-only runs write prepared documents)
+_PREPARE_FLAGS = frozenset((
+    "target_lang", "min_quality", "gopher", "normalize", "dedup",
+    "sentence_span_dedup",
+))
 
 
-def _validate_docs_args(parser, args, supplied: set[str]) -> None:
-    """--source docs argument validation — BEFORE get_spark (r13
-    review): a usage error must not boot a JVM, and under
-    getOrCreate it must never stop a session some other caller owns
-    (main()'s finally stops the session it obtained).  ``supplied``
-    is :func:`_resolve_scoped`'s explicitly-given set — the sentinel
-    test, never a value-vs-default compare."""
-    if (
-        args.tokenize is None
-        and args.tokenizer_json is None
-        and args.train_tokenizer is None
-        and not _prepare_requested(args)
-    ):
+_FAMILIES = ("wordpiece", "bpe", "unigram")
+_SERVE = tuple(f"--tokenize {f}" for f in _FAMILIES) + ("--tokenizer-json",)
+_TRAIN = tuple(f"--train-tokenizer {f}" for f in _FAMILIES)
+
+#: docs flag → the tokenizer modes it applies to.  A run's mode is
+#: one of _SERVE or _TRAIN, or none for a prepare-only run.
+_MODE_SCOPE = {
+    "vocab": ("--tokenize wordpiece", "--tokenize bpe"),
+    "merges": ("--tokenize bpe",),
+    "lm": ("--tokenize unigram",),
+    "charsmap": ("--tokenizer-json",),
+    "basic_tokenize": ("--tokenize wordpiece", "--train-tokenizer wordpiece"),
+    "space_marker": ("--tokenize unigram", "--train-tokenizer unigram"),
+    "pack": _SERVE,
+    "shards": _SERVE,
+    "byte_level": ("--train-tokenizer bpe",),
+    "prune_rank": ("--train-tokenizer unigram",),
+    "special_token": _TRAIN,
+    "vocab_size": _TRAIN,
+    "out_model": _TRAIN,
+    "train_sample_fraction": _TRAIN,
+}
+
+#: tokenizer mode → the flags it cannot run without
+_MODE_NEEDS = {
+    "--tokenize wordpiece": ("vocab",),
+    "--tokenize bpe": ("vocab", "merges"),
+    "--tokenize unigram": ("lm",),
+    **{mode: ("vocab_size", "out_model") for mode in _TRAIN},
+}
+
+#: docs flag → the flag without which it would be silently ignored
+_REQUIRES = {"shard_seed": "shards", "langid_model": "target_lang"}
+
+
+def _validate_docs_args(parser, args, given: set[str]) -> None:
+    """--source docs argument validation, before get_spark: a usage
+    error must not start a JVM, and under getOrCreate it must never
+    stop a session some other caller owns (main()'s finally stops the
+    session it obtained).  Each rule is checked once, on whether a
+    flag was given (``given``), never on its value."""
+    modes = [
+        mode for dest, mode in (
+            ("tokenize", f"--tokenize {args.tokenize}"),
+            ("tokenizer_json", "--tokenizer-json"),
+            ("train_tokenizer", f"--train-tokenizer {args.train_tokenizer}"),
+        )
+        if dest in given
+    ]
+    if len(modes) > 1:
+        parser.error(
+            f"{' and '.join(modes)} are one run each — train first, "
+            "then serve the written artifacts in a second invocation"
+        )
+    mode = modes[0] if modes else None
+    if mode is None and given.isdisjoint(_PREPARE_FLAGS):
         parser.error(
             "--source docs requires --tokenize, --tokenizer-json, "
             "--train-tokenizer, and/or at least one prepare flag "
             "(--target-lang/--min-quality/--gopher/--normalize/"
             "--dedup/--sentence-span-dedup)"
         )
-    if args.tokenizer_json is not None:
-        if args.tokenize is not None:
+    for dest in _MODE_NEEDS.get(mode, ()):
+        if dest not in given:
+            parser.error(f"{mode} requires {_flag(dest)}")
+    for dest, scope in _MODE_SCOPE.items():
+        if dest in given and mode not in scope:
             parser.error(
-                "--tokenizer-json and --tokenize are one serve "
-                "mode each — the file carries the family; drop "
-                "--tokenize"
+                f"{_flag(dest)} applies only to {' or '.join(scope)} "
+                f"(got {mode or 'a prepare-only run'})"
             )
-        if args.train_tokenizer is not None:
-            parser.error(
-                "--train-tokenizer and --tokenizer-json are one "
-                "run each — train first, then serve the written "
-                "file in a second invocation"
-            )
-    elif "charsmap" in supplied:
-        # supplied-but-discarded flags must error (the --shard-seed
-        # precedent) — even an explicit '--charsmap record' outside
-        # --tokenizer-json is a call shape that does nothing
+    for dest, needed in _REQUIRES.items():
+        if dest in given and needed not in given:
+            parser.error(f"{_flag(dest)} requires {_flag(needed)}")
+    if "out" in given and mode in _TRAIN:
         parser.error(
-            "--charsmap applies to --tokenizer-json serving only"
+            "--out does not apply to --train-tokenizer "
+            "(artifacts go under --out-model)"
         )
-    if args.train_tokenizer is not None:
-        if args.tokenize is not None:
-            parser.error(
-                "--train-tokenizer and --tokenize are one run each — "
-                "train first, then serve the written artifacts with "
-                "--tokenize in a second invocation"
-            )
-        if args.vocab_size is None or args.out_model is None:
-            parser.error(
-                "--train-tokenizer requires --vocab-size and "
-                "--out-model"
-            )
-        if args.vocab_size < 1:
-            parser.error("--vocab-size must be >= 1")
-        if args.train_sample_fraction is not None and not (
-            0.0 < args.train_sample_fraction <= 1.0
-        ):
-            parser.error("--train-sample-fraction must be in (0, 1]")
-        if args.byte_level and args.train_tokenizer != "bpe":
-            parser.error(
-                "--byte-level applies only to --train-tokenizer bpe"
-            )
-        if (
-            args.prune_rank is not None
-            and args.train_tokenizer != "unigram"
-        ):
-            parser.error(
-                "--prune-rank applies only to --train-tokenizer "
-                "unigram"
-            )
-        if (
-            args.special_token is not None
-            and args.basic_tokenize
-        ):
-            # the trainer raises the same contradiction — but a
-            # usage error must not boot a JVM (the
-            # validate-before-get_spark rule)
-            parser.error(
-                "--special-token with --basic-tokenize is not "
-                "supported: the BasicTokenizer punctuation split "
-                "would mangle the literal special texts before the "
-                "training protection runs"
-            )
-        if args.special_token is not None:
-            # shape check pre-JVM through the trainer's own validator
-            from wikiextractor_spark.functions.tokenizer import (
-                _check_train_specials,
-            )
-
-            try:
-                _check_train_specials(
-                    args.special_token, "--special-token"
-                )
-            except ValueError as e:
-                parser.error(str(e))
-        if args.byte_level and args.vocab_size <= 256:
-            # the byte-level alphabet is a CONSTANT 256, so this is
-            # decidable pre-JVM: <=256 leaves zero merges and the
-            # published merges.txt export would raise AFTER the full
-            # training run (r15 review; validate-before-get_spark)
-            parser.error(
-                "--byte-level needs --vocab-size >= 257 (the 256-"
-                "byte base alphabet leaves no merge budget below it)"
-            )
-        # family-scope rejection for --space-marker lives in the
-        # shared tokenize-is-None block below (train runs always
-        # reach it — --tokenize is rejected above); only the VALUE
-        # check is train-branch-specific, pre-JVM through the
-        # kernel's own validator (the serve leg's rule, one home)
-        if (
-            args.space_marker is not None
-            and args.train_tokenizer == "unigram"
-        ):
-            from wikiextractor_spark.functions.unigram import (
-                _check_marker,
-            )
-
-            try:
-                _check_marker(args.space_marker, "--space-marker")
-            except ValueError as e:
-                parser.error(str(e))
-        if args.basic_tokenize and args.train_tokenizer != "wordpiece":
-            parser.error(
-                "--basic-tokenize applies only to --tokenize "
-                "wordpiece or --train-tokenizer wordpiece"
-            )
-    else:
-        if args.byte_level:
-            parser.error(
-                "--byte-level applies only to --train-tokenizer bpe"
-            )
-        if args.prune_rank is not None:
-            parser.error(
-                "--prune-rank applies only to --train-tokenizer "
-                "unigram"
-            )
-        if args.special_token is not None:
-            parser.error(
-                "--special-token requires --train-tokenizer"
-            )
-        for d in ("vocab_size", "out_model", "train_sample_fraction"):
-            if getattr(args, d) is not None:
-                parser.error(
-                    f"--{d.replace('_', '-')} requires "
-                    "--train-tokenizer"
-                )
-    if args.sentence_span_dedup is not None and args.sentence_span_dedup < 2:
-        parser.error("--sentence-span-dedup must be >= 2")
-    if args.langid_model is not None and args.target_lang is None:
-        # mirror prepare_corpus's contract at the parser boundary —
-        # a model without the gate it acts through is a usage error,
-        # and it must not boot a JVM
-        parser.error("--langid-model requires --target-lang")
-    if args.tokenize is None:
-        for d in ("vocab", "merges", "lm"):
-            if getattr(args, d) is not None:
-                parser.error(f"--{d} requires --tokenize")
-        if (
-            (args.pack is not None or args.shards is not None)
-            and args.tokenizer_json is None
-        ):
-            parser.error(
-                "--pack/--shards require --tokenize or "
-                "--tokenizer-json (they operate on id streams)"
-            )
-        if args.shard_seed and args.shards is None:
-            parser.error("--shard-seed applies only with --shards")
-        if args.basic_tokenize and args.train_tokenizer != "wordpiece":
-            parser.error(
-                "--basic-tokenize applies only to --tokenize "
-                "wordpiece or --train-tokenizer wordpiece"
-            )
-        if (
-            args.space_marker is not None
-            and args.train_tokenizer != "unigram"
-        ):
-            parser.error(
-                "--space-marker applies only to --tokenize unigram "
-                "or --train-tokenizer unigram"
-            )
-        return
-    need = {"wordpiece": ("vocab",), "bpe": ("vocab", "merges"),
-            "unigram": ("lm",)}[args.tokenize]
-    for d in need:
-        if getattr(args, d) is None:
-            parser.error(
-                f"--tokenize {args.tokenize} requires --{d}"
-            )
-    stray = [
-        f"--{d}" for d in ("vocab", "merges", "lm")
-        if d not in need and getattr(args, d) is not None
-    ]
-    if stray:
+    if "byte_level" in given and args.vocab_size <= 256:
+        # the byte-level alphabet is a constant 256: below 257 no merge
+        # is left, and the merges.txt export would fail after training
         parser.error(
-            f"{', '.join(stray)} do not apply to --tokenize "
-            f"{args.tokenize}"
+            "--byte-level needs --vocab-size >= 257 (the 256-"
+            "byte base alphabet leaves no merge budget below it)"
         )
-    if args.basic_tokenize and args.tokenize != "wordpiece":
+    if {"special_token", "basic_tokenize"} <= given:
         parser.error(
-            "--basic-tokenize applies only to --tokenize wordpiece"
+            "--special-token with --basic-tokenize is not "
+            "supported: the BasicTokenizer punctuation split "
+            "would mangle the literal special texts before the "
+            "training protection runs"
         )
-    if args.space_marker is not None and args.tokenize != "unigram":
-        parser.error(
-            "--space-marker applies only to --tokenize unigram"
-        )
-    if args.space_marker is not None:
-        # VALUE check pre-JVM through the kernel's own validator (one
-        # home, no drift): '--space-marker=' or a whitespace marker
-        # must exit 2 here, not traceback after a JVM boot (r14
-        # review; the r13 validate-before-get_spark rule)
-        from wikiextractor_spark.functions.unigram import _check_marker
-
-        try:
-            _check_marker(args.space_marker, "--space-marker")
-        except ValueError as e:
-            parser.error(str(e))
-    if args.tokenize == "bpe" and (
+    if mode == "--tokenize bpe" and (
         args.vocab.endswith(".json") != args.merges.endswith(".txt")
     ):
-        # artifact format implies its GRAIN (r14): mixing the
-        # published byte-level pair with the engine's char-grain
-        # parquet pair would serve one side under the other's replay
+        # artifact format implies its grain: mixing the published
+        # byte-level pair with the engine's char-grain parquet pair
+        # would serve one side under the other's replay
         parser.error(
             "--vocab/--merges must be the SAME artifact family: "
             "published vocab.json + merges.txt, or the engine's "
             "parquet pair from --train-tokenizer bpe"
         )
-    if args.pack is not None and args.pack < 1:
-        parser.error("--pack must be a positive token budget")
-    if args.shards is not None and args.shards < 1:
-        parser.error("--shards must be >= 1")
-    if args.shards is None and args.shard_seed:
-        parser.error(
-            "--shard-seed applies only with --shards (it would "
-            "otherwise be silently ignored)"
-        )
+    # value checks through the kernels' own validators (both pass None)
+    from wikiextractor_spark.functions.tokenizer import _check_train_specials
+    from wikiextractor_spark.functions.unigram import _check_marker
+
+    try:
+        _check_marker(args.space_marker, "--space-marker")
+        _check_train_specials(args.special_token, "--special-token")
+    except ValueError as e:
+        parser.error(str(e))
 
 
 def _run_train_tokenizer(spark, args, docs) -> None:
@@ -915,9 +695,10 @@ def _run_train_tokenizer(spark, args, docs) -> None:
               f"--lm {out}/unigram_lm{mk_hint})")
 
 
-def _run_docs_tail(parser, spark, args) -> None:
-    """--source docs: TOKENIZE → [PACK] → [SHARD] over a parquet
-    documents surface.  Artifact formats are the PUBLISHED ones per
+def _run_docs_tail(spark, args, given: set[str]) -> None:
+    """--source docs: [PREPARE] → TOKENIZE → [PACK] → [SHARD] over a
+    parquet documents surface (``given``: the flags on the command
+    line).  Artifact formats are the PUBLISHED ones per
     mode (vocab.txt / vocab.json + merges.txt / the modelio
     keyed-table parquet|tsv) — the byte-level GPT-2 pre-tokenizer is
     implied by --tokenize bpe, exactly the real-artifact serving
@@ -926,7 +707,7 @@ def _run_docs_tail(parser, spark, args) -> None:
     was already established by _validate_docs_args — BEFORE the
     Spark session exists."""
     docs = spark.read.parquet(args.infn).select("doc_id", "text")
-    if _prepare_requested(args):
+    if not given.isdisjoint(_PREPARE_FLAGS):
         from wikiextractor_spark.operators.corpus import prepare_corpus
 
         langid_model = None
@@ -1078,34 +859,15 @@ def _run_docs_tail(parser, spark, args) -> None:
 
 def main(argv: list[str] | None = None) -> None:
     parser = build_parser()
-    args = parser.parse_args(argv)
-    out_supplied = args.out is not _UNSET
-    if not out_supplied:
-        args.out = "wiki_out"
-    supplied = _resolve_scoped(args)
-    _check_flag_compat(parser, args, supplied)
-    # Spark reads maxRecordsPerFile <= 0 as "no limit": a value that
-    # silently does nothing is a usage error
-    if (
-        args.max_records_per_file is not None
-        and args.max_records_per_file < 1
-    ):
-        parser.error("--max-records-per-file must be >= 1")
+    args, given = _parse(parser, argv)
+    _check_flag_compat(parser, args, given)
     if args.source == "docs":
-        _validate_docs_args(parser, args, supplied)
-        if args.train_tokenizer is not None and out_supplied:
-            # supplied-but-discarded flags must error, not produce a
-            # plausible-looking run with nothing at --out (r14
-            # review; the --shard-seed precedent)
-            parser.error(
-                "--out does not apply to --train-tokenizer "
-                "(artifacts go under --out-model)"
-            )
+        _validate_docs_args(parser, args, given)
     cfg = ExtractorConfig(incubator=args.incubator, compress=args.compress)
     spark = get_spark("wikiextractor-spark-cli")
     try:
         if args.source == "docs":
-            _run_docs_tail(parser, spark, args)
+            _run_docs_tail(spark, args, given)
             return
         if args.source != "dump":
             from wikiextractor_spark.sources.wet import (
@@ -1126,17 +888,13 @@ def main(argv: list[str] | None = None) -> None:
             print(f"wrote {args.out}")
             return
         from wikiextractor_spark.pipeline import dump_pages, pages_to_text
+        from wikiextractor_spark.sources.dump import read_pages
+        from wikiextractor_spark.sources.lineparser import read_pages_lineparser
 
-        if args.parser == "line":
-            from wikiextractor_spark.sources.dump import filter_pages
-            from wikiextractor_spark.sources.lineparser import read_pages_lineparser
-
-            pages = filter_pages(read_pages_lineparser(spark, args.infn).drop("page_id_raw"), cfg)
-        else:
-            pages = dump_pages(spark, args.infn, cfg)
+        read = read_pages_lineparser if args.parser == "line" else read_pages
         pages_to_text(
             spark,
-            pages,
+            dump_pages(spark, args.infn, cfg, read),
             args.out,
             cfg,
             vital_path=args.vitalfn,

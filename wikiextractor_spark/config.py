@@ -56,9 +56,3 @@ class ExtractorConfig:
     accepted_namespaces: frozenset[str] = DEFAULT_ACCEPTED_NAMESPACES
     incubator: str = ""  # incubator language code, '' = disabled
     compress: bool = False
-
-    @property
-    def ignored_tags(self) -> tuple[str, ...]:
-        if self.keep_links:
-            return IGNORED_TAGS
-        return IGNORED_TAGS + ("a",)

@@ -12,6 +12,8 @@ that matters at 100 TB.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wikiextractor_spark.config import ExtractorConfig
@@ -26,11 +28,17 @@ from wikiextractor_spark.sources.vital import apply_vital_filter, read_vital_tit
 from wikiextractor_spark.udfs import make_clean_udf, make_compact_udf
 
 
-def dump_pages(spark: SparkSession, dump_path: str, cfg: ExtractorConfig) -> DataFrame:
-    """Dump → kept pages.  A dump with fewer scan splits than cores
-    (one .xml or .xml.bz2 file) is spread once before the UDF stage; a
-    no-op otherwise."""
-    return spread_for_compute(filter_pages(read_pages(spark, dump_path), cfg))
+def dump_pages(
+    spark: SparkSession,
+    dump_path: str,
+    cfg: ExtractorConfig,
+    read: Callable[[SparkSession, str], DataFrame] = read_pages,
+) -> DataFrame:
+    """Dump → kept pages, parsed by ``read`` (the xml source, or
+    ``read_pages_lineparser`` for the bug-compatible parser).  A dump
+    with fewer scan splits than cores (one .xml or .xml.bz2 file) is
+    spread once before the UDF stage; a no-op otherwise."""
+    return spread_for_compute(filter_pages(read(spark, dump_path), cfg))
 
 
 def _clean_and_compact(
@@ -101,12 +109,3 @@ def extract_to_text(
         spark, dump_pages(spark, dump_path, cfg), out_dir, cfg, vital_path, max_records_per_file
     )
 
-
-def exploded_lines(docs: DataFrame) -> DataFrame:
-    """Line-grain view: one row per output line with its position —
-    the engine's explode of the reference's per-line prints."""
-    return docs.select(
-        "page_id",
-        "title",
-        F.posexplode("lines").alias("line_no", "line"),
-    )
